@@ -11,7 +11,6 @@ flink_streaming_2_10_spark/functions/money.py).
 
 from __future__ import annotations
 
-import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -1867,326 +1866,6 @@ def q_revenue_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Force-flag value ``tools/update_fingerprints.py --mark-changed``
-#: records for a key (guaranteed to differ from every sha256 hexdigest).
-#: Kept literally in sync with the tool's ``CHANGED_SENTINEL``; the tool
-#: asserts the two match at import time.
-_CHANGED_SENTINEL = "<changed-since-last-driver-verification>"
-
-
-def _staleness_rotated(base: dict, evidence_dir: str | None = None) -> dict:
-    """Reorder the query registry CHANGE-AWARE, then stalest-first.
-
-    The driver's correctness run records only the first 50 dict entries
-    per round, but the registry is larger. Sort key per query (the r8
-    verdict's rotation fix — staleness alone deferred exactly the
-    queries whose implementations round 8 had just modified):
-
-    1. **needs-first-or-re-verification first** — the query either has
-       NEVER appeared in any ``CORRECTNESS_r*.json`` (zero driver
-       evidence — the r9 verdict's rotation fix: such keys used to sort
-       *below* changed keys and could be crowded out of the 50-row
-       window indefinitely), or its current source fingerprint (hash of
-       its implementing package modules + entry-local helpers, see
-       ``_query_fingerprint``) differs from the one recorded in
-       ``QUERY_FINGERPRINTS.json``, which ``tools/update_fingerprints.
-       py`` refreshes only for keys inside the driver window, so a
-       deferred-and-edited key stays flagged until a driver run
-       actually re-verifies the new code. WITHIN this tier,
-       force-flagged keys (``tools/update_fingerprints.py
-       --mark-changed``, recorded as :data:`_CHANGED_SENTINEL`) sort
-       FIRST: the sentinel is an explicit attestation that the key's
-       OWN implementing source was edited, which outranks keys whose
-       fingerprint merely drifted — possibly through a shared module
-       every query imports (the r18 catalog-memo ripple flagged all
-       135 keys at once, and the staleness fallback then deferred
-       exactly the handful of genuinely operator-edited queries for
-       ~2 rounds — the r18 verdict's What's-wrong 2);
-    2. **staleness** — which round each key last appeared in
-       (``CORRECTNESS_r*.json``), never-recorded keys first (they carry
-       last_seen = -1, so within tier 0 they precede every changed key;
-       sentinel-flagged keys carry last_seen = -0.5 — after the
-       never-verified, ahead of every ripple-flagged key);
-    3. canonical (registry) order as the tie-break.
-
-    Any read failure degrades to the canonical order; a missing
-    fingerprint file degrades to pure staleness. The evidence scan is
-    memoized per directory (it cannot change within a process, and
-    ``queries()`` is called from dozens of test/bench sites).
-    """
-    import os
-
-    try:
-        here = evidence_dir or os.path.dirname(os.path.abspath(__file__))
-        last_seen = dict(_evidence_last_seen(here))
-        stored = dict(_stored_fingerprints(here))
-    except Exception:
-        return base
-    canon = {k: i for i, k in enumerate(base)}
-
-    def sort_key(k: str):
-        changed = 1
-        if k not in last_seen:
-            # Never driver-verified: zero evidence outranks stale-but-
-            # once-green evidence, so compete in the changed tier (and
-            # win it via last_seen = -1).
-            changed = 0
-        elif stored:
-            rec = stored.get(k)
-            if rec is None:
-                # Driver evidence exists but NO fingerprint was ever
-                # recorded for it: the key was verified in the round
-                # AFTER the fingerprint file was last written, and may
-                # have been edited since — nothing can attest the green
-                # row covers the CURRENT code (the r13 media-keys blind
-                # spot). Conservative: re-verify.
-                changed = 0
-            else:
-                if rec == _CHANGED_SENTINEL:
-                    # Explicitly attested operator edit (--mark-changed):
-                    # front of the changed tier, ahead of ripple-flagged
-                    # keys whose own source may be untouched — but still
-                    # behind never-verified keys (zero evidence outranks
-                    # attested drift, the r9 ordering).
-                    return (0, -0.5, canon[k])
-                cur = _query_fingerprint(k)
-                if cur is not None and cur != rec:
-                    changed = 0
-        return (changed, last_seen.get(k, -1), canon[k])
-
-    return {k: base[k] for k in sorted(base, key=sort_key)}
-
-
-@functools.lru_cache(maxsize=8)
-def _stored_fingerprints(here: str) -> tuple[tuple[str, str], ...]:
-    """(key, fingerprint-at-last-driver-verification) pairs from
-    ``QUERY_FINGERPRINTS.json`` (written by tools/update_fingerprints.py
-    at each round's end); empty if the file is missing/unreadable."""
-    import json
-    import os
-
-    path = os.path.join(here, "QUERY_FINGERPRINTS.json")
-    try:
-        with open(path) as fh:
-            data = json.load(fh)
-    except (OSError, ValueError):
-        return ()
-    if not isinstance(data, dict):
-        return ()
-    return tuple(
-        (k, v["fp"] if isinstance(v, dict) else v) for k, v in data.items()
-    )
-
-
-_PKG_NAME = "flink_streaming_2_10_spark"
-
-
-def _impl_closure(fn, seen, mods, local_srcs) -> None:
-    """Collect the package modules and entry-local helper functions a
-    query implementation transitively references, by walking code-object
-    ``co_names`` (covers both module-level imports resolved through
-    ``__globals__`` and in-function ``import`` statements, whose dotted
-    module paths the compiler interns into ``co_names``)."""
-    import types
-
-    if fn in seen:
-        return
-    seen.add(fn)
-    code = getattr(fn, "__code__", None)
-    if code is None:
-        return
-    names: set[str] = set()
-    stack = [code]
-    while stack:
-        c = stack.pop()
-        names.update(c.co_names)
-        for const in c.co_consts:
-            if hasattr(const, "co_names"):
-                stack.append(const)
-    for name in names:
-        if name.startswith(_PKG_NAME):
-            mods.add(name)
-            continue
-        obj = fn.__globals__.get(name)
-        if obj is None:
-            continue
-        if isinstance(obj, types.ModuleType):
-            if obj.__name__.startswith(_PKG_NAME):
-                mods.add(obj.__name__)
-        elif callable(obj):
-            m = getattr(obj, "__module__", None)
-            if isinstance(m, str) and m.startswith(_PKG_NAME):
-                mods.add(m)
-            elif m == __name__ and getattr(obj, "__code__", None) is not None:
-                local_srcs.append(obj)
-                _impl_closure(obj, seen, mods, local_srcs)
-
-
-@functools.lru_cache(maxsize=None)
-def _module_file_hash(mod_name: str) -> str:
-    import hashlib
-    import importlib
-
-    try:
-        mod = importlib.import_module(mod_name)
-        with open(mod.__file__, "rb") as fh:
-            return hashlib.sha256(fh.read()).hexdigest()
-    except Exception:
-        return f"unreadable:{mod_name}"
-
-
-@functools.lru_cache(maxsize=None)
-def _module_pkg_imports(mod_name: str) -> tuple[str, ...]:
-    """Package modules that ``mod_name``'s SOURCE imports — top-level
-    AND function-body statements alike (``ast.walk``), resolving
-    ``from pkg.mod import name`` submodule forms. Source-level on
-    purpose (r19 determinism fix): the former runtime ``vars(module)``
-    walk both MISSED function-body imports (``shard.py`` reaches
-    pipeline.dedup/components only inside defs, so
-    curated_corpus_neardup's fingerprint silently excluded the modules
-    its pair pipeline executes) and was IMPORT-ORDER-DEPENDENT (a
-    package module's ``vars()`` accumulates submodule bindings as a
-    side effect of any import anywhere in the process, so the same key
-    fingerprinted differently in different processes). The repo uses
-    absolute imports only."""
-    import ast
-    import importlib.util
-
-    try:
-        spec = importlib.util.find_spec(mod_name)
-        with open(spec.origin) as fh:
-            tree = ast.parse(fh.read())
-    except Exception:
-        return ()
-    found: set[str] = set()
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Import):
-            for alias in node.names:
-                if alias.name.startswith(_PKG_NAME):
-                    found.add(alias.name)
-        elif isinstance(node, ast.ImportFrom):
-            if (
-                node.level == 0
-                and node.module
-                and node.module.startswith(_PKG_NAME)
-            ):
-                found.add(node.module)
-                # `from pkg.mod import name`: name may itself be a
-                # submodule (package __init__ re-exports) — keep it
-                # only if it resolves to one.
-                for alias in node.names:
-                    cand = f"{node.module}.{alias.name}"
-                    try:
-                        if importlib.util.find_spec(cand) is not None:
-                            found.add(cand)
-                    except (ImportError, ModuleNotFoundError, ValueError):
-                        pass
-    return tuple(sorted(found))
-
-
-@functools.lru_cache(maxsize=None)
-def _closure_modules(key: str) -> tuple[str, ...] | None:
-    """Transitive package-module closure of query ``key``'s
-    implementation: the entry-side code-object walk seeds the set
-    (``_impl_closure``), then each module's SOURCE imports
-    (:func:`_module_pkg_imports` — deterministic, covers function-body
-    imports) expand it to a fixpoint."""
-    fn = _base_queries().get(key)
-    if fn is None:
-        return None
-    seen: set = set()
-    mods: set[str] = set()
-    local_fns: list = []
-    _impl_closure(fn, seen, mods, local_fns)
-    frontier = list(mods)
-    while frontier:
-        m = frontier.pop()
-        for nm in _module_pkg_imports(m):
-            if nm not in mods:
-                mods.add(nm)
-                frontier.append(nm)
-    return tuple(sorted(mods))
-
-
-@functools.lru_cache(maxsize=None)
-def _query_fingerprint(key: str) -> str | None:
-    """Source fingerprint of everything implementing query ``key``: the
-    transitive closure of package modules it references (module files
-    hashed whole — module granularity errs toward re-verifying more,
-    never less; see :func:`_closure_modules` for what "references"
-    covers) plus the entry-local sources (its own q_* wrapper and
-    any entry helpers it calls). Returns None if the key is unknown or
-    any source is unavailable."""
-    import hashlib
-    import inspect
-
-    fn = _base_queries().get(key)
-    if fn is None:
-        return None
-    closure = _closure_modules(key)
-    if closure is None:
-        return None
-    mods = set(closure)
-    seen: set = set()
-    local_mods: set[str] = set()
-    local_fns: list = []
-    _impl_closure(fn, seen, local_mods, local_fns)
-    h = hashlib.sha256()
-    for m in sorted(mods):
-        h.update(m.encode())
-        h.update(_module_file_hash(m).encode())
-    try:
-        for lf in sorted({fn, *local_fns}, key=lambda f: f.__qualname__):
-            h.update(inspect.getsource(lf).encode())
-    except (OSError, TypeError):
-        return None
-    # The RENDERED oracle SQL is part of what the driver verified: the
-    # gate compares Spark output against it, so an oracle edit (an
-    # inline f-string in oracle_sql(), an oracle-generator function, or
-    # a constant only the oracle reads) invalidates the key's green row
-    # exactly as a Spark-side edit does. Hashing the rendered string
-    # covers every such path at exact granularity — including oracle
-    # generators living OUTSIDE the query fn's module closure, which
-    # the module hashes above cannot see (r14 rotation-gap fix; the
-    # reconcile tool's oracle-segment check is the matching half).
-    h.update(b"<oracle>")
-    h.update(_rendered_oracles().get(key, "<none>").encode())
-    return h.hexdigest()
-
-
-@functools.lru_cache(maxsize=1)
-def _rendered_oracles() -> dict[str, str]:
-    """Memoized ``oracle_sql()`` — deterministic pure string building,
-    rendered once per process for fingerprinting."""
-    return oracle_sql()
-
-
-@functools.lru_cache(maxsize=8)
-def _evidence_last_seen(here: str) -> tuple[tuple[str, int], ...]:
-    """(key, latest round recorded) pairs from CORRECTNESS_r*.json."""
-    import glob
-    import json
-    import os
-    import re
-
-    last_seen: dict[str, int] = {}
-    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as fh:
-                recorded = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(recorded, dict):
-            continue
-        for key in recorded:
-            last_seen[key] = max(last_seen.get(key, -1), rnd)
-    return tuple(last_seen.items())
-
-
 def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document top-5 distinctive terms by tf·(N/df): one corpus
     tokenize scan into postings, tf/df hash aggs with map-side
@@ -2553,10 +2232,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Query registry, self-rotated under the driver's 50-row
     correctness cap: implementation-changed-since-last-driver-green keys
     first, then least-recently-driver-verified (see
-    ``_staleness_rotated``), so every key carries a driver-green row at
-    most one round old — and a key whose code just changed re-verifies
+    ``flink_streaming_2_10_spark/rotation.py``), so every key carries a
+    driver-green row at most one round old — and a key whose code just changed re-verifies
     the SAME round — even though only 50 are checked per round."""
-    return _staleness_rotated(_base_queries())
+    import os
+
+    from flink_streaming_2_10_spark.rotation import staleness_rotated
+
+    here = os.path.dirname(os.path.abspath(__file__))
+    return staleness_rotated(_base_queries(), here, oracle_sql)
 
 
 def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

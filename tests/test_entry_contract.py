@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entrymod
+from flink_streaming_2_10_spark.rotation import staleness_rotated
 from tests.conftest import SF_SMALL, assert_df_matches_oracle
 
 QUERIES = entrymod.queries()
@@ -43,19 +44,19 @@ def test_staleness_rotation_orders_unverified_first(tmp_path):
         json.dumps(dict.fromkeys(["b", "c"], {}))
     )
     (tmp_path / "CORRECTNESS_r03.json").write_text("{not json")  # ignored
-    got = list(entrymod._staleness_rotated(base, evidence_dir=str(tmp_path)))
+    got = list(staleness_rotated(base, str(tmp_path), entrymod.oracle_sql))
     assert got == ["a", "d", "b", "c"]
     # never-recorded keys sort before everything
     base2 = {"zz_new": object(), **base}
     assert (
-        list(entrymod._staleness_rotated(base2, evidence_dir=str(tmp_path)))[0]
+        list(staleness_rotated(base2, str(tmp_path), entrymod.oracle_sql))[0]
         == "zz_new"
     )
     # empty evidence dir degrades to canonical order
     empty = tmp_path / "none"
     empty.mkdir()
     assert list(
-        entrymod._staleness_rotated(base, evidence_dir=str(empty))
+        staleness_rotated(base, str(empty), entrymod.oracle_sql)
     ) == list(base)
     # real registry invariant: rotation is a permutation of the canon
     assert set(entrymod.queries()) == set(QUERIES)

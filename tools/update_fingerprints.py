@@ -1,8 +1,8 @@
 """Refresh QUERY_FINGERPRINTS.json — the change-aware half of the
-query-registry rotation (``__spark_entry__._staleness_rotated``).
+query-registry rotation (``flink_streaming_2_10_spark/rotation.py``).
 
 Contract: ``QUERY_FINGERPRINTS.json`` maps each query key to the source
-fingerprint (``__spark_entry__._query_fingerprint``) of its
+fingerprint (``rotation.query_fingerprint``) of its
 implementation AS OF ITS LAST DRIVER VERIFICATION. The rotation flags a
 key whose current fingerprint differs and sorts it into the driver's
 50-row correctness window, so modified code is re-verified the same
@@ -36,9 +36,6 @@ import sys
 HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
 
-#: Sentinel guaranteed to differ from every sha256 hexdigest.
-CHANGED_SENTINEL = "<changed-since-last-driver-verification>"
-
 
 def main() -> int:
     ap = argparse.ArgumentParser()
@@ -55,13 +52,12 @@ def main() -> int:
 
     sys.path.insert(0, repo)
     import __spark_entry__ as em
+    from flink_streaming_2_10_spark import rotation
 
-    # The rotation gives sentinel-flagged keys front-of-window priority;
-    # that only works if both sides agree on the literal.
-    assert em._CHANGED_SENTINEL == CHANGED_SENTINEL
-
-    keys = list(em._base_queries())
-    last_seen = dict(em._evidence_last_seen(repo))
+    base = em._base_queries()
+    keys = list(base)
+    fingerprint = rotation.fingerprinter(base, em.oracle_sql)
+    last_seen = dict(rotation.evidence_last_seen(repo))
     latest_round = max(last_seen.values(), default=-1)
     verified_now = {k for k, r in last_seen.items() if r == latest_round}
 
@@ -78,10 +74,10 @@ def main() -> int:
     updated, kept, flagged = [], [], []
     for k in keys:
         if k in args.mark_changed:
-            stored[k] = CHANGED_SENTINEL
+            stored[k] = rotation.CHANGED_SENTINEL
             flagged.append(k)
         elif args.all or k in verified_now:
-            fp = em._query_fingerprint(k)
+            fp = fingerprint(k)
             if fp is not None:
                 stored[k] = fp
                 updated.append(k)

@@ -4,7 +4,7 @@ keys after change-aware rotation) with the tier that put each key there
 paragraphs, so round notes never drift from what the rotation will
 actually submit.
 
-Tiers, in sort order (see __spark_entry__._staleness_rotated):
+Tiers, in sort order (``flink_streaming_2_10_spark.rotation.tier``):
 
 * ``never``   — no driver evidence in any CORRECTNESS_r*.json;
 * ``no-fp``   — evidence exists but no fingerprint was recorded for it
@@ -29,22 +29,15 @@ def main() -> None:
     window = int(sys.argv[1]) if len(sys.argv) > 1 else 50
 
     import __spark_entry__ as em
+    from flink_streaming_2_10_spark import rotation
 
     here = os.path.dirname(os.path.abspath(em.__file__))
-    last_seen = dict(em._evidence_last_seen(here))
-    stored = dict(em._stored_fingerprints(here))
+    last_seen = dict(rotation.evidence_last_seen(here))
+    stored = dict(rotation.stored_fingerprints(here))
+    fingerprint = rotation.fingerprinter(em._base_queries(), em.oracle_sql)
 
     def tier(k: str) -> str:
-        if k not in last_seen:
-            return "never"
-        if stored:
-            rec = stored.get(k)
-            if rec is None:
-                return "no-fp"
-            cur = em._query_fingerprint(k)
-            if cur is not None and cur != rec:
-                return "changed"
-        return f"stale r{last_seen[k]:02d}"
+        return rotation.tier(k, last_seen, stored, fingerprint)
 
     order = list(em.queries())
     counts: dict[str, int] = {}
@@ -60,9 +53,7 @@ def main() -> None:
     )
     # Invariant the rotation exists to provide: nothing outside the
     # window needs re-verification.
-    leaked = [
-        k for k in deferred if tier(k) in ("never", "no-fp", "changed")
-    ]
+    leaked = [k for k in deferred if tier(k) in rotation.NEEDS_VERIFICATION]
     if leaked:
         print(f"WARNING: needs-verification keys DEFERRED: {leaked}")
         sys.exit(1)
