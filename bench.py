@@ -17,19 +17,15 @@ Queries are isolated: operator-internal caches are released between
 queries (release_cached), so a query's time never depends on an earlier
 query having materialized an identical sub-plan.
 
-``calib`` in the output is a fixed host-speed probe (best-of-3 of an
-identical hash-aggregate job) taken at session START. The round-10
-postmortem (BENCH_COMPARE.md, top section) showed this probe is
-JIT-phase-dependent — it drifts 2.8–3.1× within one session as C2
-keeps compiling — so ``calib`` ratios under ~1.5× are noise, not host
-drift. ``calib_end`` is the same probe taken AFTER the timed
-iterations, at a reproducible JIT-maturity point: use ``calib_end``
-for cross-round host comparison; anchor regression calls on raw
-per-query min-vs-min (BENCH.json ``queries_min``) regardless.
-``calib_basket`` (durable BENCH.json only) extends calib_end to three
-runtime regimes — jvm / arrow / shuffle — because a single JVM burst
-cannot see Python-worker GIL load or exchange contention; per-class
-gating rules live in BENCH_COMPARE.md.
+Failures are loud: a query that raises in any pass is listed by name
+under ``failed`` in the stdout line (sorted; never trimmed to fit the
+stdout budget) and, with the first line of its error, under ``errors``
+in BENCH.json. It records -1.0, counts toward neither ``value`` nor
+``value_min``, and the process exits 1 after printing the line.
+
+Python workers import the package through ``PYTHONPATH``, which gets the
+repo root before the session starts, so the bench runs the same from any
+working directory.
 """
 
 from __future__ import annotations
@@ -40,49 +36,21 @@ import statistics
 import sys
 import time
 
+ROOT = os.path.dirname(os.path.abspath(__file__))
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    n_iter = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_N", "3")))
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+# The driver retains only the last ~2000 stdout chars; headroom under it.
+_STDOUT_BUDGET = 1950
 
-    import __spark_entry__ as entrymod
+
+def run_passes(spark, queries, sf_dir: str, n_iter: int, warmup: int):
+    """Run ``warmup`` untimed and ``n_iter`` timed passes over
+    ``queries`` (name -> fn(spark, sf_dir) -> DataFrame), each executed
+    by a noop write. Returns (samples, errors): name -> timed seconds,
+    and name -> first line of the first error it raised, if any."""
     from flink_streaming_2_10_spark.pipeline.caching import release_cached
-    from flink_streaming_2_10_spark.session import get_spark
 
-    spark = get_spark("bench")
-    queries = entrymod.queries()
-
-    # Warm the JVM/readers once with the cheapest query.
-    try:
-        entrymod.entry(spark).write.format("noop").mode("overwrite").save()
-    except Exception:
-        pass
-
-    # Host-speed calibration: a fixed, data-independent JVM-side job
-    # (hash-aggregate over a generated range). Identical code across
-    # rounds, so the ratio of two rounds' `calib` values measures
-    # CONTAINER drift — this host has shown sustained ~1.5-1.7× speed
-    # swings between rounds on unchanged code; divide query deltas by
-    # the calib ratio before calling them regressions. Best-of-3.
-    from pyspark.sql import functions as _F
-
-    def _calib_once() -> float:
-        t0 = time.time()
-        (
-            spark.range(100_000_000)
-            # pmod keeps the sum < 3e13 — raw hash sums overflow long
-            # under ANSI mode
-            .select(_F.pmod(_F.xxhash64("id"), _F.lit(1_000_003)).alias("h"))
-            .agg(_F.sum("h")).collect()
-        )
-        return time.time() - t0
-
-    _calib_once()  # JIT warm
-    calib = round(min(_calib_once() for _ in range(3)), 3)
-
-    warmup = max(0, int(os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1")))
     samples: dict[str, list[float]] = {name: [] for name in queries}
+    errors: dict[str, str] = {}
     for it in range(warmup + n_iter):
         timed = it >= warmup
         for name, fn in queries.items():
@@ -93,108 +61,43 @@ def main() -> None:
                     samples[name].append(time.time() - t0)
             except Exception as exc:  # noqa: BLE001
                 print(f"bench error in {name}: {exc}", file=sys.stderr)
+                lines = str(exc).strip().splitlines()
+                errors.setdefault(
+                    name, f"{type(exc).__name__}: {lines[0] if lines else ''}"
+                )
             finally:
                 # Operators register internal persists (postings,
                 # signatures, bucketed vectors); release between queries
                 # so iterations don't reuse — or accumulate — cached
                 # blocks across runs.
                 release_cached()
+    return samples, errors
 
-    # Same probe at session END: the JVM is JIT-mature here, which the
-    # round-10 postmortem showed is the only reproducible maturity point
-    # (start-of-session probes drift 2.8x with C2 phase). Cross-round
-    # host comparisons should use THIS value.
-    calib_end = round(min(_calib_once() for _ in range(3)), 3)
 
-    # Mini-basket probe (r13 verdict item 4): ONE JIT-sensitive JVM
-    # burst cannot represent three runtime regimes — the r8 postmortem
-    # showed Python/GIL stages see co-located CPU load the JVM probe
-    # can't, and r12→r13's probe swung 2.75x while the workload moved
-    # 0.93x. Three fixed, data-independent components, each timed
-    # best-of-3 at session END (same JIT-maturity argument as
-    # calib_end): 'jvm' = whole-stage-codegen hash agg (reuses
-    # calib_end — identical probe), 'arrow' = a mapInPandas stage
-    # (Python worker + Arrow transfer + GIL), 'shuffle' = a 1M-group
-    # exchange. Cross-round, gate each query class against ITS
-    # component (see BENCH_COMPARE.md); recorded in the durable
-    # BENCH.json only (the stdout window is budget-bound).
-    def _calib_arrow_once() -> float:
-        def _f(it):
-            for pdf in it:
-                pdf["h"] = (pdf["id"] * 2654435761) % 1000003
-                yield pdf[["h"]]
-
-        t0 = time.time()
-        (
-            spark.range(2_000_000)
-            .mapInPandas(_f, "h long")
-            .agg(_F.sum("h"))
-            .collect()
-        )
-        return time.time() - t0
-
-    def _calib_shuffle_once() -> float:
-        t0 = time.time()
-        (
-            spark.range(20_000_000)
-            .select((_F.col("id") % 1_000_000).alias("k"))
-            .groupBy("k")
-            .agg(_F.count(_F.lit(1)).alias("c"))
-            .agg(_F.sum("c"))
-            .collect()
-        )
-        return time.time() - t0
-
-    # Fourth regime (r15 verdict item 1): DRIVER-LOOP — queries like
-    # bpe_merges / pca_top_component / kmeans submit many tiny jobs with
-    # Python driver work between them, so their wall time is dominated
-    # by per-job fixed overhead (DAG scheduling, task launch, a 1-row
-    # collect) rather than by any of the three data-plane regimes above.
-    # On a contended host that overhead swings far more than codegen
-    # throughput (raw medians moved up to 5.5× in r15 on unchanged
-    # plans). Probe it directly: a fixed 10-round argmax-collect loop
-    # over a small generated table — same shape as one BPE merge round
-    # (pipeline/bpe.py: groupBy → 1-row argmax → collect → next round).
-    def _calib_driverloop_once() -> float:
-        t0 = time.time()
-        base = spark.range(100_000).select((_F.col("id") % 1_001).alias("k"))
-        for _ in range(10):
-            (
-                base.groupBy("k")
-                .agg(_F.count(_F.lit(1)).alias("c"))
-                .orderBy(_F.desc("c"), _F.asc("k"))
-                .limit(1)
-                .collect()
-            )
-        return time.time() - t0
-
-    _calib_arrow_once()  # python-worker spin-up is not the signal
-    _calib_shuffle_once()
-    _calib_driverloop_once()
-    calib_basket = {
-        "jvm": calib_end,
-        "arrow": round(min(_calib_arrow_once() for _ in range(3)), 3),
-        "shuffle": round(min(_calib_shuffle_once() for _ in range(3)), 3),
-        "driverloop": round(min(_calib_driverloop_once() for _ in range(3)), 3),
-    }
-
+def summarize(samples, errors, sf_dir: str, n_iter: int) -> tuple[str, str]:
+    """Build (stdout line, durable BENCH.json text) from run_passes'
+    output. A failed query records -1.0 and counts toward no total."""
     # Canonical SORTED key order in every emitted artifact: execution
     # order rotates with driver-verification staleness (see
-    # __spark_entry__._staleness_rotated), but artifact key order must
+    # flink_streaming_2_10_spark.rotation), but artifact key order must
     # not — sorted keys keep BENCH.json/stdout diffs stable across
     # rounds and checkouts for order-sensitive consumers.
-    timings = {
-        name: (round(statistics.median(samples[name]), 3) if samples[name] else -1.0)
-        for name in sorted(samples)
-    }
+    def per_query(stat):
+        return {
+            name: (
+                round(stat(samples[name]), 3)
+                if samples[name] and name not in errors
+                else -1.0
+            )
+            for name in sorted(samples)
+        }
+
+    timings = per_query(statistics.median)
     # Per-query MIN alongside the median: the min is the best observed
     # cold-cache execution, so a median/min gap flags host jitter or
     # codegen/JIT warmup rather than a real plan change — regression calls
     # should compare both before blaming the code.
-    timings_min = {
-        name: (round(min(samples[name]), 3) if samples[name] else -1.0)
-        for name in sorted(samples)
-    }
+    timings_min = per_query(min)
     total = round(sum(t for t in timings.values() if t >= 0), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
@@ -210,8 +113,6 @@ def main() -> None:
         "queries": timings,
         "sf": sf_val,
         "n": n_iter,
-        "calib": calib,
-        "calib_end": calib_end,
         # Total of per-query MINS: the best observed cold-cache pass.
         # Cross-round min-vs-min at the total level lives in the driver's
         # stdout artifact (the r7 verdict's accounting gap); the PER-QUERY
@@ -220,16 +121,16 @@ def main() -> None:
         # full second name→value dict can never fit the stdout window:
         # the median dict alone is ~1.8 KB at 65 queries).
         "value_min": round(sum(t for t in timings_min.values() if t >= 0), 3),
+        "failed": sorted(errors),
     }
     result = json.dumps(slim, separators=(",", ":"))
     # The driver retains only the last ~2000 stdout chars; a line that
     # outgrows the window silently truncates into unparseable JSON (the
     # BENCH_r05 failure). Degrade DETERMINISTICALLY instead: drop timing
     # precision to 2 decimals, and only if the registry has grown past
-    # even that, fail LOUDLY — the durable BENCH.json (written below
+    # even that, fail LOUDLY — the durable BENCH.json (written by main()
     # BEFORE the assert) still has everything, and a visible error beats
     # a silently null record.
-    _STDOUT_BUDGET = 1950  # headroom under the 2000-char retention window
     if len(result) > _STDOUT_BUDGET:
         slim["queries"] = {k: round(v, 2) for k, v in timings.items()}
         result = json.dumps(slim, separators=(",", ":"))
@@ -260,23 +161,49 @@ def main() -> None:
             # regardless of what the stdout ladder trimmed from slim.
             "queries": timings,
             "queries_min": timings_min,
-            "calib_basket": calib_basket,
+            "errors": dict(sorted(errors.items())),
             "iterations": [
                 round(sum(ts[i] for ts in samples.values() if len(ts) > i), 3)
                 for i in range(n_iter)
             ],
         }
     )
+    return result, verbose
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    n_iter = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_N", "3")))
+    warmup = max(0, int(os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1")))
+    sys.path.insert(0, ROOT)
+    # Python workers resolve imports from their own PYTHONPATH, not the
+    # driver's sys.path: without this, UDF-bearing queries fail with
+    # ModuleNotFoundError when the bench runs outside the repo root.
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH", "")) if p
+    )
+
+    import __spark_entry__ as entrymod
+    from flink_streaming_2_10_spark.session import get_spark
+
+    spark = get_spark("bench")
+    queries = entrymod.queries()
+
+    # Warm the JVM/readers once with the cheapest query.
+    try:
+        entrymod.entry(spark).write.format("noop").mode("overwrite").save()
+    except Exception:
+        pass
+
+    samples, errors = run_passes(spark, queries, sf_dir, n_iter, warmup)
+    result, verbose = summarize(samples, errors, sf_dir, n_iter)
     # Durable copy first — BEFORE the stdout-budget assert, so a completed
     # multi-iteration run always leaves a full record on disk even if the
     # stdout line can't fit the window (and if anything clips the stdout
     # tail — progress-bar races, pipe truncation — the driver or a human
     # can read the file).
     try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH.json"),
-            "w",
-        ) as fh:
+        with open(os.path.join(ROOT, "BENCH.json"), "w") as fh:
             fh.write(verbose + "\n")
     except OSError:
         pass
@@ -289,6 +216,8 @@ def main() -> None:
     # can interleave after it — the JSON is the process's final stdout.
     spark.stop()
     print(result, flush=True)
+    if errors:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

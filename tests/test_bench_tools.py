@@ -1,10 +1,10 @@
-"""Guards for the cross-round bench comparison tooling
-(tools/bench_compare.py) — the judge and every round's perf adjudication
-run it, so its gating logic is pinned here: drift-band suppression,
-known-noisy-band exclusion, git min-recovery, and per-regime basket
-adjustment.
+"""Guards for the bench tooling. tools/bench_compare.py: every round's
+perf adjudication runs it, so its raw-ratio gate is pinned here —
+cross-series corroboration, known-noisy-band exclusion, git
+min-recovery, and the exit codes of the recorded driver-artifact pairs.
+bench.py: a failing query is listed, never counted as time.
 
-Pure-function tests import the module directly; end-to-end gate tests
+Pure-function tests import the modules directly; end-to-end gate tests
 shell out exactly as a round does.
 """
 
@@ -21,25 +21,17 @@ import pytest
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _mod():
-    spec = importlib.util.spec_from_file_location(
-        "bench_compare", os.path.join(ROOT, "tools", "bench_compare.py")
-    )
+def _mod(name="bench_compare", path=("tools", "bench_compare.py")):
+    spec = importlib.util.spec_from_file_location(name, os.path.join(ROOT, *path))
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
     return m
 
 
-def _doc(queries, calib=0.2, basket=None, mins=False, value=None):
-    d = {
-        "value": value if value is not None else round(sum(queries.values()), 3),
-        "queries": queries,
-        "calib": calib,
-    }
-    if mins:
-        d["queries_min"] = dict(queries)
-    if basket:
-        d["calib_basket"] = basket
+def _doc(queries, calib=None):
+    d = {"value": round(sum(queries.values()), 3), "queries": queries}
+    if calib is not None:
+        d["calib"] = calib  # retired probe: old artifacts carry it
     return d
 
 
@@ -57,24 +49,25 @@ def _run(old: dict, new: dict, tmp_path):
 
 def test_in_band_regression_gates_exit_2(tmp_path):
     r = _run(
-        _doc({"q1": 1.0, "q2": 1.0}, calib=0.2),
-        _doc({"q1": 1.0, "q2": 1.5}, calib=0.2),
+        _doc({"q1": 1.0, "q2": 1.0}),
+        _doc({"q1": 1.0, "q2": 1.5}),
         tmp_path,
     )
     assert r.returncode == 2
     assert "q2" in r.stdout.splitlines()[-1]
 
 
-def test_out_of_band_drift_suppresses_adjusted_and_gates_raw(tmp_path):
-    # calib says the host got 2.75x faster; raw is flat -> exit 0, raw-only
+def test_raw_gate_ignores_calib_fields(tmp_path):
+    # Old artifacts still carry the retired calib probe; it loads but
+    # never moves the gate. Flat raw under a x0.36 calib pair -> exit 0.
     r = _run(
         _doc({"q1": 1.0}, calib=0.55),
         _doc({"q1": 0.95}, calib=0.2),
         tmp_path,
     )
-    assert r.returncode == 0
-    assert "outside the credible drift band" in r.stdout
-    # ...but a REAL raw regression under the same artifact drift still gates
+    assert r.returncode == 0, r.stdout
+    assert "calib" not in r.stdout
+    # ...and a real raw x2 regression gates whatever the probe read.
     r2 = _run(
         _doc({"q1": 1.0}, calib=0.55),
         _doc({"q1": 2.0}, calib=0.2),
@@ -83,48 +76,28 @@ def test_out_of_band_drift_suppresses_adjusted_and_gates_raw(tmp_path):
     assert r2.returncode == 2
 
 
+def test_in_band_calib_drift_no_longer_excuses_regression(tmp_path):
+    # A calib pair inside the old drift band (x1.4) used to divide raw
+    # x1.5 down to x1.07 and pass; the raw ratio now gates.
+    r = _run(_doc({"q": 1.0}, calib=0.2), _doc({"q": 1.5}, calib=0.28), tmp_path)
+    assert r.returncode == 2, r.stdout
+    assert "q (x1.50)" in r.stdout
+
+
 def test_noisy_band_suppresses_async_inside_envelope(tmp_path):
     r = _run(
-        _doc({"async_ordered_identity": 0.9, "q": 1.0}, calib=0.2),
-        _doc({"async_ordered_identity": 1.6, "q": 1.0}, calib=0.2),
+        _doc({"async_ordered_identity": 0.9, "q": 1.0}),
+        _doc({"async_ordered_identity": 1.6, "q": 1.0}),
         tmp_path,
     )
     assert r.returncode == 0  # x1.78 but inside the documented 0.8-1.7 s band
     # outside the envelope it gates again
     r2 = _run(
-        _doc({"async_ordered_identity": 0.9, "q": 1.0}, calib=0.2),
-        _doc({"async_ordered_identity": 1.9, "q": 1.0}, calib=0.2),
+        _doc({"async_ordered_identity": 0.9, "q": 1.0}),
+        _doc({"async_ordered_identity": 1.9, "q": 1.0}),
         tmp_path,
     )
     assert r2.returncode == 2
-
-
-def test_basket_adjusts_per_regime(tmp_path):
-    # regimes come from PLAN_AUDIT.md: pick one known arrow query and one
-    # known jvm query from the live audit file
-    m = _mod()
-    regimes = m.load_regimes()
-    assert regimes, "PLAN_AUDIT.md should parse"
-    assert regimes.get("async_ordered_identity") == "arrow"
-    assert regimes.get("tpch_q6_forecast_revenue") == "jvm"
-    basket_old = {"jvm": 0.10, "arrow": 0.50, "shuffle": 1.0}
-    basket_new = {"jvm": 0.12, "arrow": 0.40, "shuffle": 1.0}  # jvm x1.2, arrow x0.8
-    old = _doc(
-        {"tpch_q6_forecast_revenue": 1.0, "multimodal_features": 1.0},
-        calib=0.2, basket=basket_old,
-    )
-    new = _doc(
-        {"tpch_q6_forecast_revenue": 1.0, "multimodal_features": 1.0},
-        calib=0.2, basket=basket_new,
-    )
-    r = _run(old, new, tmp_path)
-    assert "adjusted per regime" in r.stdout
-    lines = {
-        l.split()[0]: l.split() for l in r.stdout.splitlines() if l and l[0].isalpha()
-    }
-    # raw 1.00 for both; jvm divides by 1.2 -> 0.83, arrow by 0.8 -> 1.25
-    assert lines["tpch_q6_forecast_revenue"][-1] == "0.83"
-    assert lines["multimodal_features"][-1] == "1.25"
 
 
 def test_min_recovery_from_git_on_driver_wrapper():
@@ -143,82 +116,14 @@ def test_min_recovery_from_git_on_driver_wrapper():
     assert m.recover_min_from_git(path, {**parsed, "value": 1.0}) is None
 
 
-def test_regime_classifier_thresholds():
-    m = _mod()
-    regimes = m.load_regimes()
-    # shuffle-heavy classification: curated_corpus_quality carries 8
-    # exchanges in the audit and no Arrow stage
-    assert regimes.get("curated_corpus_quality") == "shuffle"
-
-
-def test_driverloop_regime_overrides_plan_shape(tmp_path):
-    """r16: driver-loop queries (bpe_merges etc.) adjust by the
-    'driverloop' basket component when BOTH sides carry it — overriding
-    the plan-shape classification (a kmeans round is jvm by plan) — and
-    the wider credible band (0.5..3.0) accepts contention swings the
-    jvm band would reject."""
-    # driverloop x2.0 (outside the jvm band 0.67..1.5, inside 0.5..3.0);
-    # jvm flat
-    basket_old = {"jvm": 0.10, "arrow": 0.5, "shuffle": 1.0, "driverloop": 1.0}
-    basket_new = {"jvm": 0.10, "arrow": 0.5, "shuffle": 1.0, "driverloop": 2.0}
-    old = _doc(
-        {"bpe_merges": 1.0, "tpch_q6_forecast_revenue": 1.0},
-        calib=0.2, basket=basket_old,
-    )
-    new = _doc(
-        {"bpe_merges": 2.0, "tpch_q6_forecast_revenue": 1.0},
-        calib=0.2, basket=basket_new,
-    )
-    r = _run(old, new, tmp_path)
-    # bpe raw x2.0 / driverloop drift x2.0 -> adjusted 1.00: no gate
-    assert r.returncode == 0, r.stdout
-    lines = {
-        l.split()[0]: l.split()
-        for l in r.stdout.splitlines() if l and l[0].isalpha()
-    }
-    assert lines["bpe_merges"][-1] == "1.00"
-    assert lines["tpch_q6_forecast_revenue"][-1] == "1.00"
-
-
-def test_driverloop_regime_absent_on_old_side_falls_back(tmp_path):
-    """Pre-r16 artifacts carry no 'driverloop' probe: the override must
-    NOT engage (bpe falls back to its plan-shape regime / scalar), so
-    a genuine x2 move still gates."""
-    basket_old = {"jvm": 0.10, "arrow": 0.5, "shuffle": 1.0}
-    basket_new = {"jvm": 0.10, "arrow": 0.5, "shuffle": 1.0, "driverloop": 2.0}
-    old = _doc({"bpe_merges": 1.0}, calib=0.2, basket=basket_old)
-    new = _doc({"bpe_merges": 2.0}, calib=0.2, basket=basket_new)
-    r = _run(old, new, tmp_path)
-    assert r.returncode == 2, r.stdout
-
-
-def test_driverloop_query_names_exist_in_registry():
-    """DRIVERLOOP_QUERIES is a hard-coded name set (r17 ADVICE): a
-    renamed or deleted registry query would silently fall back to its
-    plan-shape regime, where the narrow jvm band reproduces the r15
-    false-positive class. Fail loudly on any drift between the set and
-    the live registry."""
-    import __spark_entry__ as entrymod
-
-    m = _mod()
-    registry = set(entrymod.queries())
-    missing = m.DRIVERLOOP_QUERIES - registry
-    assert not missing, (
-        f"DRIVERLOOP_QUERIES names not in the registry (renamed/removed?): "
-        f"{sorted(missing)}"
-    )
-
-
 def test_median_mover_with_flat_min_not_gated_calls_out(tmp_path):
     """r18 (verdict task 3): the r17 q19 shape — a 3-sample median
     inflated x2 by iteration spread while min-vs-min is flat. With both
     sides carrying mins the display is min-of-n (raw x1.0, no flag), and
     the median movement must surface as the dedicated median-jitter
     call-out without gating."""
-    old = {"value": 1.0, "queries": {"q": 1.0}, "queries_min": {"q": 0.5},
-           "calib": 0.2}
-    new = {"value": 2.0, "queries": {"q": 2.0}, "queries_min": {"q": 0.5},
-           "calib": 0.2}
+    old = {"value": 1.0, "queries": {"q": 1.0}, "queries_min": {"q": 0.5}}
+    new = {"value": 2.0, "queries": {"q": 2.0}, "queries_min": {"q": 0.5}}
     r = _run(old, new, tmp_path)
     assert r.returncode == 0, r.stdout
     assert "median-jitter, min-corroborated flat" in r.stdout
@@ -230,10 +135,8 @@ def test_min_mover_with_flat_median_excused(tmp_path):
     artifacts — min x1.22 off one lucky old-side min, median x0.99
     flat). Flagged on the displayed min series but excused by the flat
     median: cross-series call-out, exit 0."""
-    old = {"value": 1.0, "queries": {"q": 1.0}, "queries_min": {"q": 0.5},
-           "calib": 0.2}
-    new = {"value": 1.0, "queries": {"q": 1.0}, "queries_min": {"q": 0.75},
-           "calib": 0.2}
+    old = {"value": 1.0, "queries": {"q": 1.0}, "queries_min": {"q": 0.5}}
+    new = {"value": 1.0, "queries": {"q": 1.0}, "queries_min": {"q": 0.75}}
     r = _run(old, new, tmp_path)
     assert r.returncode == 0, r.stdout
     assert "cross-series-excused" in r.stdout
@@ -242,10 +145,8 @@ def test_min_mover_with_flat_median_excused(tmp_path):
 def test_regression_on_both_series_still_gates(tmp_path):
     """Cross-series corroboration must NOT excuse a real regression: a
     code change moves min AND median together, and that shape gates."""
-    old = {"value": 1.0, "queries": {"q": 1.0}, "queries_min": {"q": 0.5},
-           "calib": 0.2}
-    new = {"value": 2.0, "queries": {"q": 2.0}, "queries_min": {"q": 1.0},
-           "calib": 0.2}
+    old = {"value": 1.0, "queries": {"q": 1.0}, "queries_min": {"q": 0.5}}
+    new = {"value": 2.0, "queries": {"q": 2.0}, "queries_min": {"q": 1.0}}
     r = _run(old, new, tmp_path)
     assert r.returncode == 2, r.stdout
 
@@ -291,29 +192,80 @@ def test_r16_r17_driver_artifacts_exit_zero_with_q19_callout():
     assert "tpch_q19_bracket_revenue" in r.stdout.split("median-jitter")[1]
 
 
-def test_driverloop_excused_above_cross_regime_ceiling_calls_out(tmp_path):
-    """A driverloop-regime row excused by raw corroboration (raw <=1.15)
-    can still carry an adjusted ratio up to x2.3 when the driverloop
-    divisor sits at its 0.5 band floor — above the x1.72 ceiling any
-    other regime can reach while excused. It must NOT gate (recovery
-    rounds legitimately produce this shape for partial-share driver-loop
-    queries) but MUST print the dedicated call-out so the residual risk
-    is sized correctly (r17 ADVICE)."""
-    # driverloop probe halves (host per-job latency recovered);
-    # bpe_merges raw x1.10 -> adjusted 2.20 > 1.72 ceiling
-    basket_old = {"jvm": 0.10, "arrow": 0.5, "shuffle": 1.0, "driverloop": 2.0}
-    basket_new = {"jvm": 0.10, "arrow": 0.5, "shuffle": 1.0, "driverloop": 1.0}
-    old = _doc({"bpe_merges": 1.0, "tpch_q6_forecast_revenue": 1.0},
-               calib=0.2, basket=basket_old)
-    new = _doc({"bpe_merges": 1.1, "tpch_q6_forecast_revenue": 1.0},
-               calib=0.2, basket=basket_new)
-    r = _run(old, new, tmp_path)
-    assert r.returncode == 0, r.stdout
-    assert "DRIVERLOOP-EXCUSED ABOVE CROSS-REGIME CEILING" in r.stdout
-    assert "bpe_merges" in r.stdout.split("CROSS-REGIME CEILING")[1]
-    # with the driverloop probe flat, the same raw x1.10 adjusts to
-    # x1.10 — no excused-above-ceiling row, no call-out
-    new2 = _doc({"bpe_merges": 1.1, "tpch_q6_forecast_revenue": 1.0},
-                calib=0.2, basket=basket_old)
-    r2 = _run(old, new2, tmp_path)
-    assert "CROSS-REGIME CEILING" not in r2.stdout
+#: Exit codes of every recorded driver-artifact pair (old, new, code).
+#: The same codes came out with and without the retired calib probes,
+#: so removing them changed no compare decision (BENCH_COMPARE.md).
+_RECORDED_PAIRS = [
+    ("06", "07", 2), ("07", "08", 0), ("08", "09", 2), ("09", "11", 0),
+    ("11", "12", 2), ("12", "13", 0), ("13", "14", 2), ("14", "15", 2),
+    ("15", "16", 2), ("16", "17", 0), ("17", "18", 0), ("18", "19", 2),
+    ("18_c8", "19_c8", 0), ("18", "18_c8", 2), ("19", "19_c8", 0),
+]
+
+
+def test_recorded_driver_pairs_keep_their_exit_codes(monkeypatch, capsys):
+    log = subprocess.run(
+        ["git", "log", "--format=%H", "-n", "1", "--", "BENCH_r19_c8.json"],
+        cwd=ROOT, capture_output=True, text=True,
+    )
+    if log.returncode != 0 or not log.stdout.strip():
+        pytest.skip("git history unavailable (min recovery needs it)")
+    m = _mod()
+    got = []
+    for old, new, _ in _RECORDED_PAIRS:
+        monkeypatch.setattr(sys, "argv", [
+            "bench_compare.py",
+            os.path.join(ROOT, f"BENCH_r{old}.json"),
+            os.path.join(ROOT, f"BENCH_r{new}.json"),
+        ])
+        with pytest.raises(SystemExit) as exc:
+            m.main()
+        got.append((old, new, exc.value.code))
+    capsys.readouterr()
+    assert got == _RECORDED_PAIRS
+
+
+def test_bench_lists_failed_queries_and_counts_no_time(spark):
+    bench = _mod("bench", ("bench.py",))
+    calls = {"flaky": 0}
+
+    def good(spark, sf_dir):
+        return spark.range(3)
+
+    def bad(spark, sf_dir):
+        raise ValueError("boom\nsecond line")
+
+    def flaky(spark, sf_dir):  # fails only in its second pass
+        calls["flaky"] += 1
+        if calls["flaky"] == 2:
+            raise RuntimeError("once")
+        return spark.range(3)
+
+    sf_dir = "/data/sf0.001"
+    samples, errors = bench.run_passes(
+        spark, {"good": good, "bad": bad, "flaky": flaky}, sf_dir,
+        n_iter=2, warmup=0,
+    )
+    line, durable = bench.summarize(samples, errors, sf_dir, 2)
+    out, rec = json.loads(line), json.loads(durable)
+    assert out["failed"] == ["bad", "flaky"]
+    assert out["queries"]["bad"] == out["queries"]["flaky"] == -1.0
+    assert out["queries"]["good"] > 0
+    assert out["value"] == out["queries"]["good"]
+    assert out["value_min"] == rec["queries_min"]["good"]
+    assert rec["errors"] == {
+        "bad": "ValueError: boom", "flaky": "RuntimeError: once",
+    }
+
+
+def test_bench_failed_field_survives_stdout_budget():
+    # 300 queries force the budget ladder to trim the per-query dict;
+    # the failed list is never trimmed.
+    bench = _mod("bench", ("bench.py",))
+    samples = {f"query_{i:03d}": [1.0 + i / 1000] for i in range(300)}
+    samples["zz_failed"] = []
+    line, _ = bench.summarize(samples, {"zz_failed": "E: x"}, "/d/sf0.1", 1)
+    out = json.loads(line)
+    assert len(line) <= bench._STDOUT_BUDGET
+    assert out["queries_omitted"] > 0
+    assert out["failed"] == ["zz_failed"]

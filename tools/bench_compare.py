@@ -1,4 +1,4 @@
-"""Compare two bench outputs per query, host-drift-normalized.
+"""Compare two bench outputs per query on raw wall time.
 
 Usage: python tools/bench_compare.py [OLD.json] [NEW.json] [--md]
 
@@ -10,28 +10,17 @@ recent local bench.py run. Pass paths explicitly to override.
 
 Accepts either bench.py's raw one-line JSON or the driver's BENCH_r{N}.json
 wrapper (which nests the line under "parsed"). For each query it prints
-old/new seconds, the raw ratio, and — when both files carry the ``calib``
-host-speed probe — the CALIB-ADJUSTED ratio (raw ratio divided by
-calib_new/calib_old), which removes container drift from the comparison.
-When both files carry ``queries_min`` (bench.py's durable BENCH.json
-does; the driver wrapper's "parsed" line does not), the comparison is
-min-vs-min — the best observed cold-cache execution on each side —
-otherwise median-vs-median; min-vs-median cross-comparisons are refused
-because they bias every ratio upward (the r5→r6 ambiguity this tool
-exists to end).
+old/new seconds and the raw ratio. When both files carry ``queries_min``
+(bench.py's durable BENCH.json does; the driver wrapper's "parsed" line
+does not), the comparison is min-vs-min — the best observed cold-cache
+execution on each side — otherwise median-vs-median; min-vs-median
+cross-comparisons are refused because they bias every ratio upward (the
+r5→r6 ambiguity this tool exists to end). Fields that older artifacts
+carry beyond these (the retired ``calib`` host-speed probes) are ignored.
 
 ``--md`` emits a markdown table (for BENCH_COMPARE.md). Exit code is 2
-when any query's adjusted (or raw, if no calib) ratio exceeds
-REGRESSION_THRESHOLD — the "fix anything >1.3× adjusted" gate.
-
-Drift-band guard (r13 verdict item 1): the calib probe is a single
-JIT-sensitive JVM burst and has been observed swinging 2.75× while the
-workload moved 0.93× (BENCH_COMPARE.md r10 postmortem declared swings
-like that non-renormalizable). When the calib ratio falls OUTSIDE
-``DRIFT_BAND`` the adjusted column is suppressed entirely: ratios are
-RAW-only with a loud warning, and the regression gate runs on the raw
-ratios — a calib pair that extreme tells you the probe sampled two
-different JIT/contention phases, not that the host got 2.75× faster.
+when any query's raw ratio exceeds REGRESSION_THRESHOLD on the displayed
+series and is corroborated (below).
 
 Old-side min recovery: the driver's BENCH_r{N}.json wrapper nests only
 the stdout line (medians, no ``queries_min``), but the driver's own
@@ -67,37 +56,12 @@ import json
 import sys
 
 REGRESSION_THRESHOLD = 1.3
-#: Calib ratios outside this band are treated as probe artifacts, not
-#: host drift: suppress adjusted ratios, gate on raw (r13 verdict).
-DRIFT_BAND = (0.67, 1.5)
+#: A flagged mover must also read above this on every available raw
+#: series (min and median) to gate; see series_corroborated in main().
+RAW_CORROBORATION = 1.15
 #: (query, low_s, high_s): new-side seconds inside the band are excluded
 #: from the regression gate — measured same-code jitter envelopes.
 NOISY_BANDS = {"async_ordered_identity": (0.8, 1.7)}
-
-#: Queries whose wall time is dominated by DRIVER-LOOP overhead — many
-#: tiny driver-submitted jobs with Python between them (a collect per
-#: merge/BFS/Lloyd/convergence round), so per-job scheduling + collect
-#: latency, not data-plane throughput, sets their time. The r15 round
-#: showed this class swings up to 5.5× raw under host contention while
-#: jvm/arrow/shuffle probes move far less; bench.py's calib_basket
-#: gained a matching 'driverloop' probe (fixed 10-round 1-row argmax
-#: collect loop) so this class adjusts by ITS regime like the others.
-#: Membership is by implementation shape (grep: collect() inside a
-#: round loop): bpe.py:175, clustering.py:130, graph.py:145,
-#: components.py:212, centroids.py:61/71, pca.py:166 driver power
-#: iteration, dsir.py:204-207 broadcast collects.
-DRIVERLOOP_QUERIES = {
-    "bpe_merges",
-    "pca_top_component",
-    "semantic_kmeans",
-    "semantic_clusters",
-    "nearest_centroid",
-    "graph_shortest_hops",
-    "dedup_components",
-    "curated_corpus_neardup",
-    "multimodal_neardup",
-    "dsir_resample",
-}
 
 
 def load(path: str) -> dict:
@@ -162,37 +126,6 @@ def pick_series(old: dict, new: dict) -> tuple[dict, dict, str]:
     return old["queries"], new["queries"], "median-of-n"
 
 
-def load_regimes() -> dict[str, str]:
-    """query → runtime regime ('arrow' | 'shuffle' | 'jvm'), mechanized
-    from PLAN_AUDIT.md: an Arrow/Python stage puts a query in the
-    arrow regime (GIL/worker-bound — the r8 postmortem's class); else
-    ≥4 hash exchanges marks it shuffle-bound; everything else is
-    whole-stage-codegen jvm. Empty dict if the audit file is absent."""
-    import os
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.path.join(root, "PLAN_AUDIT.md")
-    regimes: dict[str, str] = {}
-    try:
-        with open(path) as fh:
-            for line in fh:
-                m = re.match(
-                    r"\| (\S+?) [^|]*\| (\d+) \|[^|]*\|[^|]*\|[^|]*\|"
-                    r"[^|]*\|[^|]*\|[^|]*\| (✓?) *\|",
-                    line,
-                )
-                if not m:
-                    continue
-                name, shuf, py = m.group(1), int(m.group(2)), m.group(3)
-                regimes[name] = (
-                    "arrow" if py else ("shuffle" if shuf >= 4 else "jvm")
-                )
-    except OSError:
-        return {}
-    return regimes
-
-
 def latest_driver_bench() -> str:
     """Highest-numbered BENCH_r{N}.json next to the repo root."""
     import glob
@@ -254,74 +187,17 @@ def main() -> None:
         for q in set(qo_med) & set(qn_med)
         if qo_med[q] > 0 and qn_med[q] > 0
     }
-    co, cn = old.get("calib"), new.get("calib")
-    raw_drift = (cn / co) if co and cn else None
-    # Outside the band the probe pair is an artifact, not host drift:
-    # suppress adjustment entirely and gate on raw ratios.
-    drift_artifact = raw_drift is not None and not (
-        DRIFT_BAND[0] <= raw_drift <= DRIFT_BAND[1]
-    )
-    drift = None if drift_artifact else raw_drift
-
-    # Per-regime basket adjustment (BENCH_COMPARE.md r14): when both
-    # sides carry calib_basket, each query is adjusted by ITS regime's
-    # component ratio (jvm/arrow/shuffle, classified from PLAN_AUDIT.md)
-    # instead of the single JVM scalar. A component pair outside the
-    # drift band is dropped (that regime falls back to the scalar/raw).
-    bo, bn = old.get("calib_basket"), new.get("calib_basket")
-    basket_drift: dict[str, float] = {}
-    if isinstance(bo, dict) and isinstance(bn, dict):
-        for comp in ("jvm", "arrow", "shuffle", "driverloop"):
-            if bo.get(comp) and bn.get(comp):
-                r = bn[comp] / bo[comp]
-                # The driverloop probe measures per-job fixed overhead,
-                # which legitimately swings wider than codegen
-                # throughput under contention (observed up to 5.5× on
-                # the workload side in r15) — give it a wider credible
-                # band so a genuinely-contended sample still adjusts
-                # instead of falling back to the jvm scalar.
-                lo, hi = (0.5, 3.0) if comp == "driverloop" else DRIFT_BAND
-                if lo <= r <= hi:
-                    basket_drift[comp] = r
-    regimes = load_regimes() if basket_drift else {}
-    # Driver-loop membership overrides the plan-shape classification:
-    # a kmeans round IS one scan + one agg (jvm by plan shape), but its
-    # wall time is N driver round-trips (r15 verdict item 1). Only
-    # effective when both sides carry the 'driverloop' basket probe —
-    # old artifacts without it fall back to the plan-shape regime.
-    if "driverloop" in basket_drift:
-        for q in DRIVERLOOP_QUERIES:
-            regimes[q] = "driverloop"
 
     rows = []
     for name in sorted(set(oq) | set(nq), key=lambda q: -nq.get(q, 0.0)):
         o, n = oq.get(name), nq.get(name)
         raw = n / o if o and n and o > 0 and n > 0 else None
-        divisor = basket_drift.get(regimes.get(name, "jvm")) or drift
-        adj = raw / divisor if raw is not None and divisor else None
-        rows.append((name, o, n, raw, adj))
+        rows.append((name, o, n, raw))
 
     def in_noisy_band(name: str, n: float | None) -> bool:
         band = NOISY_BANDS.get(name)
         return band is not None and n is not None and band[0] <= n <= band[1]
 
-    # Raw corroboration (r16): an adjusted-ratio flag whose RAW ratio is
-    # flat is a PROBE artifact, not a regression — r16 saw the arrow
-    # probe swing ×0.69 on an idle host, inflating four flat-raw queries
-    # past the adjusted gate (multimodal_neardup_incremental raw ×1.02 →
-    # adj ×1.48). The excused ceiling is REGIME-DEPENDENT because the
-    # divisor band is: for jvm/arrow/shuffle rows (divisor floor
-    # DRIFT_BAND[0]=0.67) the worst real regression this can excuse is
-    # raw ≤1.15 / 0.67 ≈ adj ×1.72; for driverloop rows (floor 0.5) it
-    # is raw ≤1.15 / 0.5 ≈ adj ×2.3 (r17, per ADVICE). Acceptable
-    # against the recurring false exit-2s — the per-job-latency regime
-    # is exactly where this host swings hardest and a raw ≤1.15 mover
-    # is bounded in absolute seconds — but driverloop-excused rows
-    # above the ×1.72 cross-regime ceiling get their own call-out so a
-    # reader sizes the residual risk correctly. Unconfirmed flags still
-    # PRINT below, they just don't gate.
-    RAW_CORROBORATION = 1.15
-    CROSS_REGIME_CEILING = round(RAW_CORROBORATION / DRIFT_BAND[0], 2)  # 1.72
     # Cross-series corroboration (r18, verdict task 3): a real code
     # regression shifts the WHOLE timing distribution, so a flagged
     # mover must read > x1.15 on EVERY available raw series (min AND
@@ -336,25 +212,19 @@ def main() -> None:
                 return False
         return True
 
-    worst = [
-        (name, adj if adj is not None else raw)
-        for name, _, n, raw, adj in rows
-        if (adj if adj is not None else raw) is not None
-        and (adj if adj is not None else raw) > REGRESSION_THRESHOLD
-        and (raw is None or raw > RAW_CORROBORATION)
-        and series_corroborated(name)
+    flagged = [
+        (name, raw)
+        for name, _, n, raw in rows
+        if raw is not None and raw > REGRESSION_THRESHOLD
         and not in_noisy_band(name, n)
     ]
+    worst = [(name, raw) for name, raw in flagged if series_corroborated(name)]
     # Movers flagged on the DISPLAYED series but excused by the other
     # series reading flat — informational, never gated.
     cross_excused = [
         (name, raw, min_ratio.get(name), med_ratio.get(name))
-        for name, _, n, raw, adj in rows
-        if (adj if adj is not None else raw) is not None
-        and (adj if adj is not None else raw) > REGRESSION_THRESHOLD
-        and raw is not None and raw > RAW_CORROBORATION
-        and not series_corroborated(name)
-        and not in_noisy_band(name, n)
+        for name, raw in flagged
+        if not series_corroborated(name)
     ]
     excused_names = {name for name, *_ in cross_excused}
     # Median movers with a flat min that never flagged the displayed
@@ -368,72 +238,23 @@ def main() -> None:
         and min_ratio[name] <= RAW_CORROBORATION
         and not in_noisy_band(name, nq.get(name))
     )
-    probe_inflated = [
-        (name, adj, raw)
-        for name, _, n, raw, adj in rows
-        if adj is not None and adj > REGRESSION_THRESHOLD
-        and raw is not None and raw <= RAW_CORROBORATION
-        and not in_noisy_band(name, n)
-    ]
-    # Driverloop rows excused by raw corroboration but whose adjusted
-    # ratio exceeds what any OTHER regime could reach while excused —
-    # the blind spot the regime-dependent ceiling opens. Not gated
-    # (divisor < 0.67 means the probe says the host got much faster on
-    # per-job latency, the classic recovery-round signature where
-    # partial-share driverloop queries legitimately under-track the
-    # probe), but called out loudly for manual adjudication.
-    driverloop_excused_high = [
-        (name, adj, raw)
-        for name, adj, raw in probe_inflated
-        if regimes.get(name) == "driverloop" and adj > CROSS_REGIME_CEILING
-    ]
 
     head = (
         f"series={series}; total {old['value']:.2f}s -> {new['value']:.2f}s "
-        f"(x{new['value'] / old['value']:.2f}); "
-        f"calib {co if co is not None else '-'} -> "
-        f"{cn if cn is not None else '-'}"
-        + (
-            " (basket drift "
-            + ", ".join(f"{k} x{v:.2f}" for k, v in basket_drift.items())
-            + "; adjusted per regime)"
-            if basket_drift
-            else f" (host drift x{drift:.2f}; ratios below are drift-adjusted)"
-            if drift
-            else (
-                f" *** WARNING: calib ratio x{raw_drift:.2f} is outside "
-                f"the credible drift band [{DRIFT_BAND[0]}, {DRIFT_BAND[1]}] "
-                f"— treating the probe pair as a JIT/contention artifact; "
-                f"RAW ratios only, regression gate runs on raw ***"
-                if drift_artifact
-                else " (no calib on one side: RAW ratios only)"
-            )
-        )
+        f"(x{new['value'] / old['value']:.2f})"
     )
     if md:
         print(f"# bench compare\n\n{head}\n")
-        print("| query | old s | new s | raw | adjusted |")
-        print("|---|---:|---:|---:|---:|")
-        for name, o, n, raw, adj in rows:
+        print("| query | old s | new s | raw |")
+        print("|---|---:|---:|---:|")
+        for name, o, n, raw in rows:
             f = lambda v, p="%.2f": (p % v) if v is not None else "-"
-            print(f"| {name} | {f(o, '%.3f')} | {f(n, '%.3f')} |"
-                  f" {f(raw)} | {f(adj)} |")
+            print(f"| {name} | {f(o, '%.3f')} | {f(n, '%.3f')} | {f(raw)} |")
         if worst:
-            print(f"\n**regressions > x{REGRESSION_THRESHOLD} adjusted:** "
+            print(f"\n**regressions > x{REGRESSION_THRESHOLD} raw:** "
                   + ", ".join(f"{n} (x{r:.2f})" for n, r in worst))
         else:
-            print(f"\nNo query exceeds x{REGRESSION_THRESHOLD} adjusted.")
-        if probe_inflated:
-            print("\n**probe-inflated, unconfirmed (adjusted > "
-                  f"x{REGRESSION_THRESHOLD} but raw <= x{RAW_CORROBORATION}"
-                  "; not gated):** "
-                  + ", ".join(f"{n} (adj x{a:.2f}, raw x{r:.2f})"
-                              for n, a, r in probe_inflated))
-        if driverloop_excused_high:
-            print("\n**DRIVERLOOP-EXCUSED ABOVE CROSS-REGIME CEILING "
-                  f"x{CROSS_REGIME_CEILING} — adjudicate manually:** "
-                  + ", ".join(f"{n} (adj x{a:.2f}, raw x{r:.2f})"
-                              for n, a, r in driverloop_excused_high))
+            print(f"\nNo query exceeds x{REGRESSION_THRESHOLD} raw.")
         if cross_excused:
             print("\n**cross-series-excused, other series flat (not "
                   "gated):** "
@@ -447,23 +268,14 @@ def main() -> None:
                               for n, md_r, mn_r in median_jitter))
     else:
         print(head)
-        print(f"{'query':34s} {'old':>8s} {'new':>8s} {'raw':>6s} {'adj':>6s}")
-        for name, o, n, raw, adj in rows:
+        print(f"{'query':34s} {'old':>8s} {'new':>8s} {'raw':>6s}")
+        for name, o, n, raw in rows:
             f = lambda v, w=8: (f"%{w}.3f" % v) if v is not None else " " * (w - 1) + "-"
             fr = lambda v: (f"{v:6.2f}") if v is not None else "   n/a"
-            print(f"{name:34s} {f(o)} {f(n)} {fr(raw)} {fr(adj)}")
+            print(f"{name:34s} {f(o)} {f(n)} {fr(raw)}")
         if worst:
             print(f"regressions > x{REGRESSION_THRESHOLD}: "
                   + ", ".join(f"{n} (x{r:.2f})" for n, r in worst))
-        if probe_inflated:
-            print("probe-inflated, unconfirmed (not gated): "
-                  + ", ".join(f"{n} (adj x{a:.2f}, raw x{r:.2f})"
-                              for n, a, r in probe_inflated))
-        if driverloop_excused_high:
-            print("DRIVERLOOP-EXCUSED ABOVE CROSS-REGIME CEILING "
-                  f"x{CROSS_REGIME_CEILING} — adjudicate manually: "
-                  + ", ".join(f"{n} (adj x{a:.2f}, raw x{r:.2f})"
-                              for n, a, r in driverloop_excused_high))
         if cross_excused:
             print("cross-series-excused, other series flat (not gated): "
                   + ", ".join(
