@@ -88,7 +88,6 @@ def configure(spark: SparkSession) -> SparkSession:
 def get_spark(
     app_name: str = "flink-streaming-2-10-spark",
     cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build a local SparkSession sized for this machine.
 
@@ -96,16 +95,33 @@ def get_spark(
     master/parallelism change (SURVEY.md §3.1 step 2: the environment is the
     single submission-context switch, as in the reference's
     ``StreamExecutionEnvironment.getExecutionEnvironment``).
+
+    Two settings here set the fixed cost of a streaming trigger, which
+    dominates each micro-batch of the streaming programs:
+
+    - ``spark.sql.shuffle.partitions`` is ``cpus``: one shuffle partition,
+      and so one state store per stateful operator, per core, all in one
+      task wave. Every store commits a delta file per micro-batch however
+      few rows changed, so partitions beyond the cores add commits and a
+      second wave, not parallelism. AQE still coalesces small batch
+      shuffles.
+    - Checkpoint files go through Hadoop's FileSystem API. Spark's default
+      FileContext-based manager, on ``file://`` without the native Hadoop
+      library, starts a process for file-status lookups; with it, each
+      store commit took 25-50 ms on a 4-core host. ``get_spark`` only
+      makes ``local[...]`` sessions, so the setting only meets local disk;
+      sessions set up through ``configure()`` keep Spark's default.
     """
     cpus = int(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        # local mode: shuffle width ≈ core count; AQE coalesces down when
-        # partitions are small. On a cluster this would scale with executors.
-        shuffle_partitions = max(cpus, 8)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         # No console progress bar: its \r-frames interleave with stdout

@@ -98,7 +98,7 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    session = get_spark("tests", cpus=8, shuffle_partitions=8)
+    session = get_spark("tests", cpus=8)
     yield session
     session.stop()
 

@@ -225,6 +225,27 @@ def test_recorded_driver_pairs_keep_their_exit_codes(monkeypatch, capsys):
     assert got == _RECORDED_PAIRS
 
 
+def test_tied_rows_list_in_name_order(tmp_path, monkeypatch, capsys):
+    # Equal new-side seconds list by name, not by set iteration order,
+    # which follows PYTHONHASHSEED; 26 tied names make a sorted-by-chance
+    # order vanishingly unlikely.
+    names = [f"q_{c}" for c in "zyxwvutsrqponmlkjihgfedcba"]
+    doc = json.dumps(_doc({**{n: 1.0 for n in names}, "slow": 2.0}))
+    po, pn = tmp_path / "old.json", tmp_path / "new.json"
+    po.write_text(doc)
+    pn.write_text(doc)
+    monkeypatch.setattr(sys, "argv", ["bench_compare.py", str(po), str(pn), "--md"])
+    with pytest.raises(SystemExit) as exc:
+        _mod().main()
+    assert exc.value.code == 0
+    listed = [
+        line.split("|")[1].strip()
+        for line in capsys.readouterr().out.splitlines()
+        if line.startswith("| q_") or line.startswith("| slow")
+    ]
+    assert listed == ["slow", *sorted(names)]
+
+
 def test_bench_lists_failed_queries_and_counts_no_time(spark):
     bench = _mod("bench", ("bench.py",))
     calls = {"flaky": 0}

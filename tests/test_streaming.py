@@ -50,6 +50,17 @@ def _stream_lines(spark, dirpath: str, per_file: bool = True):
     return reader.text(dirpath).withColumnRenamed("value", "text")
 
 
+def test_session_sets_one_partition_per_core_and_filesystem_checkpoints(spark):
+    # Each stateful operator commits one state store per shuffle
+    # partition per micro-batch, so get_spark sizes them to the cores
+    # (the fixture's cpus=8); the FileSystem-API manager does not shell
+    # out for file status on local disk.
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass").endswith(
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+
 def test_rolling_wordcount_refinement_sequence(spark, tmp_path):
     """Three micro-batches of 'apache flink' lines must refine cumulative
     counts 1→2→3 per word — the STREAMING_COUNTS_AS_TUPLES contract at

@@ -189,7 +189,9 @@ def main() -> None:
     }
 
     rows = []
-    for name in sorted(set(oq) | set(nq), key=lambda q: -nq.get(q, 0.0)):
+    # Name breaks ties, so equal times list in the same order whatever
+    # the process's string-hash seed makes of the set.
+    for name in sorted(set(oq) | set(nq), key=lambda q: (-nq.get(q, 0.0), q)):
         o, n = oq.get(name), nq.get(name)
         raw = n / o if o and n and o > 0 and n > 0 else None
         rows.append((name, o, n, raw))

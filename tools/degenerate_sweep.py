@@ -57,7 +57,8 @@ import duckdb
 import pandas as pd
 import pyarrow.parquet as pq
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_BASE = os.environ.get("DEGEN_SF_BASE", "/root/testdata/sf0.001")
 TABLES = (
@@ -210,7 +211,13 @@ def main() -> int:
             )
         dirs[v] = d
 
-    spark = get_spark("degenerate-sweep", cpus=8, shuffle_partitions=8)
+    # Python workers import from their own PYTHONPATH, not this sys.path:
+    # without it, UDF-bearing queries fail with ModuleNotFoundError when
+    # the sweep runs outside the checkout.
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH", "")) if p
+    )
+    spark = get_spark("degenerate-sweep", cpus=8)
     results: dict[str, dict[str, dict]] = {}
     n_div = n_err = n_ok = n_rowsonly = 0
 

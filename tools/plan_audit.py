@@ -83,7 +83,7 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from flink_streaming_2_10_spark.session import get_spark
 
-    spark = get_spark("plan-audit", cpus=8, shuffle_partitions=8)
+    spark = get_spark("plan-audit", cpus=8)
 
     # Iterative queries truncate lineage each round via localCheckpoint,
     # so their FINAL plan is just a scan of the checkpointed RDD — the r9

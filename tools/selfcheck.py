@@ -10,11 +10,15 @@ Usage: python tools/selfcheck.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
+
+#: The checkout this script belongs to, wherever it is run from.
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -27,7 +31,13 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
+    # Python workers import from their own PYTHONPATH, not this sys.path:
+    # without it, UDF-bearing queries fail with ModuleNotFoundError when
+    # the check runs outside the checkout.
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH", "")) if p
+    )
     import __spark_entry__ as entrymod
     from flink_streaming_2_10_spark.session import get_spark
 
