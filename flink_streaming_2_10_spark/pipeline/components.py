@@ -161,15 +161,26 @@ def connected_components(
         F.col(a_col).cast("long").alias("src"),
         F.col(b_col).cast("long").alias("dst"),
     )
-    # Symmetrize once; distinct() collapses multi-edges from overlapping
-    # dedup detectors so every round's join fans out at most degree-fold.
+    # Symmetrize in ONE pass over the pairs: an inline over a two-struct
+    # array emits (src, dst) and (dst, src) per row. A union of `e` with
+    # its own swapped projection would run every stage of the pair
+    # pipeline once per branch (dedup_components' build: 31 jobs, against
+    # 19 this way and 18 to collect the pairs alone). distinct() collapses
+    # multi-edges from overlapping dedup detectors so every round's join
+    # fans out at most degree-fold.
     # Lazy truncation: the strategy probe below (or, on the distributed
     # path, the loop's first materializing action) computes-and-caches
     # the checkpointed blocks — the eager form cost one extra job that
     # scanned the same pair pipeline.
     edges = truncate_lineage(
-        e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct(),
+        e.select(
+            F.inline(
+                F.array(
+                    F.struct("src", "dst"),
+                    F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
+                )
+            )
+        ).distinct(),
         checkpoint,
         eager=False,
     )

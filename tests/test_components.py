@@ -200,3 +200,36 @@ def test_dedup_canonical_with_no_pairs_is_identity(spark):
         for r in dedup_canonical(docs, empty).collect()
     }
     assert rows == {1: (1, 1), 2: (2, 1), 3: (3, 1)}
+
+
+@BOTH_PATHS
+def test_graph_operators_read_pair_input_once(spark, dsme):
+    """Symmetrizing the edges must evaluate the pair input once per row.
+    A union of the edges with their own swapped projection runs every
+    upstream stage twice — in dedup_components that is the whole
+    MinHash-LSH pair pipeline (18 -> 31 jobs). A Python UDF on ``doc_a``
+    counts how often each pair row is computed."""
+    from pyspark.sql.types import LongType
+
+    from flink_streaming_2_10_spark.pipeline.graph import shortest_path_hops
+
+    rows = [(1, 2), (2, 3), (3, 1), (10, 11)]
+    seeds = spark.createDataFrame([(1,)], ["node"])
+    for run, want in (
+        (lambda p: connected_components(p, driver_solve_max_edges=dsme),
+         {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}),
+        (lambda p: shortest_path_hops(p, seeds, driver_solve_max_edges=dsme),
+         {(1, 0), (2, 1), (3, 1)}),
+    ):
+        evals = spark.sparkContext.accumulator(0)
+
+        def _counted(x, evals=evals):
+            evals.add(1)
+            return x
+
+        count = F.udf(_counted, LongType())
+        pairs = spark.createDataFrame(rows, "doc_a long, doc_b long").select(
+            count("doc_a").alias("doc_a"), "doc_b"
+        )
+        assert {tuple(r) for r in run(pairs).collect()} == want
+        assert evals.value == len(rows)

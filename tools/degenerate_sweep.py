@@ -49,6 +49,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
 import tempfile
 import traceback
@@ -199,102 +200,106 @@ def main() -> int:
         else [args.variant]
     )
     root = tempfile.mkdtemp(prefix="degen_")
-    dirs = {}
-    for v in variants:
-        d = os.path.join(root, v)
-        if v in ("hotkey", "nullkey"):
-            build_hotkey_variant(SF_BASE, d, null_keys=(v == "nullkey"))
-        else:
-            build_variant(
-                SF_BASE, d, 0 if v != "onerow" else 1,
-                facts_only=(v == "emptyfact"),
-            )
-        dirs[v] = d
-
-    # Python workers import from their own PYTHONPATH, not this sys.path:
-    # without it, UDF-bearing queries fail with ModuleNotFoundError when
-    # the sweep runs outside the checkout.
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        p for p in (ROOT, os.environ.get("PYTHONPATH", "")) if p
-    )
-    spark = get_spark("degenerate-sweep", cpus=8)
-    results: dict[str, dict[str, dict]] = {}
-    n_div = n_err = n_ok = n_rowsonly = 0
-
-    for v in variants:
-        con = duckdb.connect()
-        for name in TABLES:
-            con.sql(
-                f"CREATE VIEW {name} AS SELECT * FROM '{dirs[v]}/{name}.parquet'"
-            )
-        for qname, fn in queries.items():
-            rec: dict = {}
-            try:
-                a = fn(spark, dirs[v]).toPandas()
-                rec["spark_rows"] = len(a)
-            except Exception as e:
-                rec["err"] = f"spark: {type(e).__name__}: {str(e)[:300]}"
-                results.setdefault(qname, {})[v] = rec
-                n_err += 1
-                print(f"ERR  {v:6s} {qname}: {rec['err']}", flush=True)
-                continue
-            sql = oracles.get(qname)
-            if sql is None:
-                rec["status"] = "rows-only (no oracle)"
-                n_rowsonly += 1
+    # The sliced tables are scratch: remove them however the run ends.
+    try:
+        dirs = {}
+        for v in variants:
+            d = os.path.join(root, v)
+            if v in ("hotkey", "nullkey"):
+                build_hotkey_variant(SF_BASE, d, null_keys=(v == "nullkey"))
             else:
-                try:
-                    b = con.sql(sql).df()
-                except Exception as e:
-                    rec["err"] = f"oracle: {type(e).__name__}: {str(e)[:300]}"
-                    results.setdefault(qname, {})[v] = rec
-                    n_err += 1
-                    print(f"ERR  {v:6s} {qname}: {rec['err']}", flush=True)
-                    continue
-                rec["oracle_rows"] = len(b)
-                try:
-                    diff = compare(a, b)
-                except Exception as e:
-                    # A comparison crash (unsortable object column etc.)
-                    # is a per-query error, not a sweep abort (ADVICE r17).
-                    rec["err"] = f"compare: {type(e).__name__}: {str(e)[:300]}"
-                    results.setdefault(qname, {})[v] = rec
-                    n_err += 1
-                    print(f"ERR  {v:6s} {qname}: {rec['err']}", flush=True)
-                    continue
-                if diff:
-                    rec["divergence"] = diff
-                    n_div += 1
-                    print(f"DIVG {v:6s} {qname}: {diff}", flush=True)
-                else:
-                    rec["status"] = "match"
-                    n_ok += 1
-            results.setdefault(qname, {})[v] = rec
-            print(
-                f"ok   {v:6s} {qname}: {rec.get('status','?')} "
-                f"({rec.get('spark_rows')} rows)",
-                flush=True,
-            )
-        con.close()
+                build_variant(
+                    SF_BASE, d, 0 if v != "onerow" else 1,
+                    facts_only=(v == "emptyfact"),
+                )
+            dirs[v] = d
 
-    summary = {
-        "variants": variants,
-        "partial": partial,
-        "queries": len(queries),
-        "match": n_ok,
-        "rows_only": n_rowsonly,
-        "divergences": n_div,
-        "errors": n_err,
-        "results": results,
-    }
-    with open(out_path, "w") as f:
-        json.dump(summary, f, indent=1, sort_keys=True)
-    print(
-        f"\nSWEEP: {len(queries)} queries x {len(variants)} variants — "
-        f"{n_ok} match, {n_rowsonly} rows-only, {n_div} DIVERGENCES, {n_err} ERRORS"
-        f" -> {out_path}"
-    )
-    return 2 if (n_div or n_err) else 0
+        # Python workers import from their own PYTHONPATH, not this sys.path:
+        # without it, UDF-bearing queries fail with ModuleNotFoundError when
+        # the sweep runs outside the checkout.
+        os.environ["PYTHONPATH"] = os.pathsep.join(
+            p for p in (ROOT, os.environ.get("PYTHONPATH", "")) if p
+        )
+        spark = get_spark("degenerate-sweep", cpus=8)
+        results: dict[str, dict[str, dict]] = {}
+        n_div = n_err = n_ok = n_rowsonly = 0
+
+        for v in variants:
+            con = duckdb.connect()
+            for name in TABLES:
+                con.sql(
+                    f"CREATE VIEW {name} AS SELECT * FROM '{dirs[v]}/{name}.parquet'"
+                )
+            for qname, fn in queries.items():
+                rec: dict = {}
+                try:
+                    a = fn(spark, dirs[v]).toPandas()
+                    rec["spark_rows"] = len(a)
+                except Exception as e:
+                    rec["err"] = f"spark: {type(e).__name__}: {str(e)[:300]}"
+                    results.setdefault(qname, {})[v] = rec
+                    n_err += 1
+                    print(f"ERR  {v:6s} {qname}: {rec['err']}", flush=True)
+                    continue
+                sql = oracles.get(qname)
+                if sql is None:
+                    rec["status"] = "rows-only (no oracle)"
+                    n_rowsonly += 1
+                else:
+                    try:
+                        b = con.sql(sql).df()
+                    except Exception as e:
+                        rec["err"] = f"oracle: {type(e).__name__}: {str(e)[:300]}"
+                        results.setdefault(qname, {})[v] = rec
+                        n_err += 1
+                        print(f"ERR  {v:6s} {qname}: {rec['err']}", flush=True)
+                        continue
+                    rec["oracle_rows"] = len(b)
+                    try:
+                        diff = compare(a, b)
+                    except Exception as e:
+                        # A comparison crash (unsortable object column etc.)
+                        # is a per-query error, not a sweep abort (ADVICE r17).
+                        rec["err"] = f"compare: {type(e).__name__}: {str(e)[:300]}"
+                        results.setdefault(qname, {})[v] = rec
+                        n_err += 1
+                        print(f"ERR  {v:6s} {qname}: {rec['err']}", flush=True)
+                        continue
+                    if diff:
+                        rec["divergence"] = diff
+                        n_div += 1
+                        print(f"DIVG {v:6s} {qname}: {diff}", flush=True)
+                    else:
+                        rec["status"] = "match"
+                        n_ok += 1
+                results.setdefault(qname, {})[v] = rec
+                print(
+                    f"ok   {v:6s} {qname}: {rec.get('status','?')} "
+                    f"({rec.get('spark_rows')} rows)",
+                    flush=True,
+                )
+            con.close()
+
+        summary = {
+            "variants": variants,
+            "partial": partial,
+            "queries": len(queries),
+            "match": n_ok,
+            "rows_only": n_rowsonly,
+            "divergences": n_div,
+            "errors": n_err,
+            "results": results,
+        }
+        with open(out_path, "w") as f:
+            json.dump(summary, f, indent=1, sort_keys=True)
+        print(
+            f"\nSWEEP: {len(queries)} queries x {len(variants)} variants — "
+            f"{n_ok} match, {n_rowsonly} rows-only, {n_div} DIVERGENCES, {n_err} ERRORS"
+            f" -> {out_path}"
+        )
+        return 2 if (n_div or n_err) else 0
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 if __name__ == "__main__":
