@@ -19,9 +19,10 @@ query having materialized an identical sub-plan.
 
 Failures are loud: a query that raises in any pass is listed by name
 under ``failed`` in the stdout line (sorted; never trimmed to fit the
-stdout budget) and, with the first line of its error, under ``errors``
-in BENCH.json. It records -1.0, counts toward neither ``value`` nor
-``value_min``, and the process exits 1 after printing the line.
+stdout budget) and, with the first line of its error (plus the last
+line of a Python worker's traceback), under ``errors`` in BENCH.json.
+It records -1.0, counts toward neither ``value`` nor ``value_min``,
+and the process exits 1 after printing the line.
 
 Python workers import the package through ``PYTHONPATH``, which gets the
 repo root before the session starts, so the bench runs the same from any
@@ -42,11 +43,23 @@ ROOT = os.path.dirname(os.path.abspath(__file__))
 _STDOUT_BUDGET = 1950
 
 
+def _error_summary(exc: BaseException) -> str:
+    """``Type: first line`` of ``exc``'s message. A Python-worker failure
+    carries its cause on the traceback's last line, so a message holding
+    a ``Traceback`` also keeps its last non-empty line."""
+    text = str(exc)
+    lines = [line.strip() for line in text.splitlines() if line.strip()]
+    summary = f"{type(exc).__name__}: {lines[0] if lines else ''}"
+    if "Traceback" in text and len(lines) > 1:
+        summary += f" ... {lines[-1]}"
+    return summary
+
+
 def run_passes(spark, queries, sf_dir: str, n_iter: int, warmup: int):
     """Run ``warmup`` untimed and ``n_iter`` timed passes over
     ``queries`` (name -> fn(spark, sf_dir) -> DataFrame), each executed
     by a noop write. Returns (samples, errors): name -> timed seconds,
-    and name -> first line of the first error it raised, if any."""
+    and name -> a summary of the first error it raised, if any."""
     from flink_streaming_2_10_spark.pipeline.caching import release_cached
 
     samples: dict[str, list[float]] = {name: [] for name in queries}
@@ -61,10 +74,7 @@ def run_passes(spark, queries, sf_dir: str, n_iter: int, warmup: int):
                     samples[name].append(time.time() - t0)
             except Exception as exc:  # noqa: BLE001
                 print(f"bench error in {name}: {exc}", file=sys.stderr)
-                lines = str(exc).strip().splitlines()
-                errors.setdefault(
-                    name, f"{type(exc).__name__}: {lines[0] if lines else ''}"
-                )
+                errors.setdefault(name, _error_summary(exc))
             finally:
                 # Operators register internal persists (postings,
                 # signatures, bucketed vectors); release between queries

@@ -13,7 +13,9 @@ Design stance (SURVEY.md §7.0):
   AQE). No RDDs, no custom Catalyst rules.
 * Python UDFs only where built-in expressions genuinely cannot express the
   semantics (the delta-trigger window A6 and ordered async I/O X1), and then
-  always Arrow-vectorized (``applyInPandas`` / ``mapInPandas``).
+  always Arrow-vectorized (A6's batch replay on ``applyInArrow``, its
+  streaming replays on ``applyInPandasWithState``, X1 on
+  ``mapInPandas``).
 """
 
 from flink_streaming_2_10_spark.session import get_spark, configure

@@ -13,14 +13,20 @@ Reference: ``TopSpeedWindowing.scala:104-115`` — per car:
 * the window is FIREd, not PURGEd: surviving buffer is retained.
 
 Spark has no trigger/evictor surface, so this is implemented as a per-key
-replay: batch via ``applyInPandas`` (deterministic given the per-key time
-sort), streaming via ``applyInPandasWithState`` carrying (buffer,
-last-trigger) state across micro-batches. Both paths share ``_replay``.
+replay. :func:`replay_columns` sorts one car's ``speed``, ``distance`` and
+``time`` columns once by (time, distance, speed) and feeds them, as native
+Python values, to the ``_replay`` state machine. The batch path runs it
+per car through ``applyInArrow`` (an Arrow table in, an Arrow table out).
+The streaming paths, ``applyInPandasWithState`` and the v2
+``transformWithStateInPandas``, concatenate a key's chunks within a
+micro-batch, run the same helper and carry (buffer, last-trigger) state
+across micro-batches.
 
 Scale notes: one hash exchange on the key; the Python stage is
-Arrow-batched, one pandas frame per key group. Per-key state is bounded by
-the eviction horizon (only events within 10 s of the newest can ever be
-emitted, and the buffer is trimmed on every fire), so memory per key is
+Arrow-batched, one Arrow table (batch) or one set of pandas chunks
+(streaming) per key group. Per-key state is bounded by the eviction
+horizon (only events within 10 s of the newest can ever be emitted, and
+the buffer is trimmed on every fire), so memory per key is
 O(events / eviction window), independent of total history length.
 """
 
@@ -28,12 +34,18 @@ from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
 OUTPUT_COLUMNS = ["carId", "speed", "distance", "time"]
 _SCHEMA = "carId int, speed int, distance double, time long"
+# _SCHEMA as Arrow types: the batch path's output table.
+_ARROW_SCHEMA = pa.schema(
+    zip(OUTPUT_COLUMNS, [pa.int32(), pa.int32(), pa.float64(), pa.int64()])
+)
 _STATE_SCHEMA = (
     "last_distance double, buf_speed array<int>, buf_distance array<double>, "
     "buf_time array<long>"
@@ -70,6 +82,40 @@ def _replay(
     return out, buffer, last_trigger_distance
 
 
+def replay_columns(
+    speed: np.ndarray,
+    distance: np.ndarray,
+    time: np.ndarray,
+    buffer: list[tuple[int, float, int]],
+    last_trigger_distance: float | None,
+    trigger_meters: float,
+    eviction_ms: int,
+) -> tuple[list[tuple[int, float, int]], list[tuple[int, float, int]], float | None]:
+    """Replay one car's rows, given as numpy columns in any order.
+
+    The rows are sorted once by (time, distance, speed), a total order on
+    the replay-relevant fields, so the fold is deterministic even when
+    timestamps tie (rows tying on all three are identical tuples and
+    commute; NaN, a null from Arrow, sorts last). The DuckDB oracle
+    numbers rows in the same order. ``buffer`` and
+    ``last_trigger_distance`` carry the state of rows replayed earlier,
+    which must all come before these in that order.
+
+    Returns (emitted, surviving_buffer, new_last_trigger_distance), as
+    ``_replay`` does, holding native Python values.
+    """
+    order = np.lexsort((speed, distance, time))
+    rows = list(
+        zip(speed[order].tolist(), distance[order].tolist(), time[order].tolist())
+    )
+    return _replay(rows, buffer, last_trigger_distance, trigger_meters, eviction_ms)
+
+
+def _columns(rows: list[tuple[int, float, int]]) -> list[list]:
+    """``(speed, distance, time)`` rows as three column lists."""
+    return [list(c) for c in zip(*rows)] or [[], [], []]
+
+
 def top_speed_windowing(
     df: DataFrame,
     trigger_meters: float = 50.0,
@@ -82,24 +128,70 @@ def top_speed_windowing(
     """
     eviction_ms = eviction_sec * 1000
 
-    def replay_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        # (time, distance, speed) — a total order on the replay-relevant
-        # fields, so the fold is deterministic even when timestamps tie
-        # (rows tying on all three are identical tuples and commute). The
-        # DuckDB oracle numbers rows with the same key.
-        pdf = pdf.sort_values(["time", "distance", "speed"], kind="mergesort")
-        rows = list(zip(pdf["speed"], pdf["distance"], pdf["time"]))
-        out, _, _ = _replay(rows, [], None, trigger_meters, eviction_ms)
-        car = pdf["carId"].iloc[0]
-        return pd.DataFrame(
-            [(car, s, d, t) for (s, d, t) in out], columns=OUTPUT_COLUMNS
+    def replay_group(table: pa.Table) -> pa.Table:
+        emitted, _, _ = replay_columns(
+            table.column("speed").to_numpy(),
+            table.column("distance").to_numpy(),
+            table.column("time").to_numpy(),
+            [],
+            None,
+            trigger_meters,
+            eviction_ms,
+        )
+        car = table.column("carId")[0].as_py()
+        columns = [[car] * len(emitted), *_columns(emitted)]
+        # from_pandas: a NaN (null speed or time read as float) stays null.
+        return pa.Table.from_arrays(
+            [
+                pa.array(values, type=field.type, from_pandas=True)
+                for values, field in zip(columns, _ARROW_SCHEMA)
+            ],
+            schema=_ARROW_SCHEMA,
         )
 
     return (
         df.select(*OUTPUT_COLUMNS)
         .groupBy("carId")
-        .applyInPandas(replay_group, schema=_SCHEMA)
+        .applyInArrow(replay_group, schema=_SCHEMA)
     )
+
+
+def _replay_micro_batch(
+    car,
+    chunks: Iterator[pd.DataFrame],
+    stored: tuple | None,
+    trigger_meters: float,
+    eviction_ms: int,
+) -> tuple[pd.DataFrame | None, tuple]:
+    """One key's micro-batch on either streaming path.
+
+    Concatenates the key's chunks before sorting: Arrow splits a large
+    group at ``spark.sql.execution.arrow.maxRecordsPerBatch``, and time
+    order must hold across the split. Replays them after ``stored`` (the
+    state tuple, ``None`` for a new key) and returns (emitted rows as a
+    frame, or ``None`` when nothing fired; the new state tuple).
+    """
+    if stored is None:
+        last_distance, buffer = None, []
+    else:
+        last_distance, bs, bd, bt = stored
+        buffer = list(zip(bs, bd, bt))
+    frames = list(chunks)
+    pdf = pd.concat(frames) if len(frames) > 1 else frames[0]
+    emitted, buffer, last_distance = replay_columns(
+        pdf["speed"].to_numpy(),
+        pdf["distance"].to_numpy(),
+        pdf["time"].to_numpy(),
+        buffer,
+        last_distance,
+        trigger_meters,
+        eviction_ms,
+    )
+    out = None
+    if emitted:
+        columns = [[car] * len(emitted), *_columns(emitted)]
+        out = pd.DataFrame(dict(zip(OUTPUT_COLUMNS, columns)))
+    return out, (last_distance, *_columns(buffer))
 
 
 def top_speed_windowing_stream(
@@ -108,9 +200,11 @@ def top_speed_windowing_stream(
     eviction_sec: int = 10,
 ):
     """Streaming path: same state machine carried across micro-batches via
-    ``applyInPandasWithState``. Requires in-order (per-key time-ascending)
-    delivery within each batch; the reference guarantees ascending
-    timestamps (TopSpeedWindowing.scala:105)."""
+    ``applyInPandasWithState``. Requires per-key time order across
+    micro-batches: no row may sort before one an earlier micro-batch
+    replayed. Within a micro-batch rows may arrive in any order. The
+    reference guarantees ascending timestamps
+    (TopSpeedWindowing.scala:105)."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     eviction_ms = eviction_sec * 1000
@@ -118,31 +212,16 @@ def top_speed_windowing_stream(
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            last_distance, bs, bd, bt = state.get
-            buffer = list(zip(bs, bd, bt))
-        else:
-            last_distance, buffer = None, []
-        emitted: list[tuple[int, float, int]] = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["time", "distance", "speed"], kind="mergesort")
-            rows = list(zip(pdf["speed"], pdf["distance"], pdf["time"]))
-            out, buffer, last_distance = _replay(
-                rows, buffer, last_distance, trigger_meters, eviction_ms
-            )
-            emitted.extend(out)
-        state.update(
-            (
-                last_distance,
-                [r[0] for r in buffer],
-                [r[1] for r in buffer],
-                [r[2] for r in buffer],
-            )
+        out, stored = _replay_micro_batch(
+            key[0],
+            pdfs,
+            state.get if state.exists else None,
+            trigger_meters,
+            eviction_ms,
         )
-        if emitted:
-            yield pd.DataFrame(
-                [(key[0], s, d, t) for (s, d, t) in emitted], columns=OUTPUT_COLUMNS
-            )
+        state.update(stored)
+        if out is not None:
+            yield out
 
     return (
         df.select(*OUTPUT_COLUMNS)
@@ -181,11 +260,11 @@ def top_speed_windowing_stream_tws(
 ):
     """Streaming path on the Spark 4 arbitrary-state v2 API
     (``transformWithStateInPandas`` + ``StatefulProcessor``): the same
-    ``_replay`` state machine, with the (buffer, last-trigger) tuple held
-    in a named ``ValueState`` instead of the single opaque
-    ``GroupState``. Identical output to
-    :func:`top_speed_windowing_stream` — the parity test runs whichever
-    API the container provides and compares against the batch replay.
+    replay, with the (buffer, last-trigger) tuple held in a named
+    ``ValueState`` instead of the single opaque ``GroupState``, and the
+    same ordering contract as :func:`top_speed_windowing_stream`.
+    Identical output to it — the parity test runs whichever API the
+    container provides and compares against the batch replay.
 
     Gate on :func:`transform_with_state_available` — it also verifies the
     ``google.protobuf`` runtime the API's streaming Python driver worker
@@ -208,34 +287,16 @@ def top_speed_windowing_stream_tws(
             self._state = handle.getValueState("replay", _STATE_SCHEMA)
 
         def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                last_distance, bs, bd, bt = self._state.get()
-                buffer = list(zip(bs, bd, bt))
-            else:
-                last_distance, buffer = None, []
-            emitted: list[tuple[int, float, int]] = []
-            for pdf in rows:
-                pdf = pdf.sort_values(
-                    ["time", "distance", "speed"], kind="mergesort"
-                )
-                recs = list(zip(pdf["speed"], pdf["distance"], pdf["time"]))
-                out, buffer, last_distance = _replay(
-                    recs, buffer, last_distance, trigger_meters, eviction_ms
-                )
-                emitted.extend(out)
-            self._state.update(
-                (
-                    last_distance,
-                    [r[0] for r in buffer],
-                    [r[1] for r in buffer],
-                    [r[2] for r in buffer],
-                )
+            out, stored = _replay_micro_batch(
+                key[0],
+                rows,
+                self._state.get() if self._state.exists() else None,
+                trigger_meters,
+                eviction_ms,
             )
-            if emitted:
-                yield pd.DataFrame(
-                    [(key[0], s, d, t) for (s, d, t) in emitted],
-                    columns=OUTPUT_COLUMNS,
-                )
+            self._state.update(stored)
+            if out is not None:
+                yield out
 
         def close(self) -> None:
             pass

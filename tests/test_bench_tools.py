@@ -279,6 +279,26 @@ def test_bench_lists_failed_queries_and_counts_no_time(spark):
     }
 
 
+def test_bench_error_keeps_python_worker_cause(spark):
+    # A Python-worker failure says what went wrong on its traceback's
+    # last line; the first line alone only says a worker raised.
+    bench = _mod("bench", ("bench.py",))
+
+    def fail(batches):
+        raise ValueError("speed column missing")
+        yield from batches
+
+    def udf_query(spark, sf_dir):
+        return spark.range(1).mapInPandas(fail, schema="id long")
+
+    _, errors = bench.run_passes(
+        spark, {"udf_query": udf_query}, "/data/sf0.001", n_iter=1, warmup=0
+    )
+    first, _, cause = errors["udf_query"].partition(" ... ")
+    assert first.startswith("PythonException: ")
+    assert cause == "ValueError: speed column missing"
+
+
 def test_bench_failed_field_survives_stdout_budget():
     # 300 queries force the budget ladder to trim the per-query dict;
     # the failed list is never trimmed.

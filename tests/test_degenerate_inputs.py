@@ -139,11 +139,12 @@ def test_partial_runs_never_default_to_canonical_path():
     runs must default to the side path; only an unrestricted run may
     write the canonical record; explicit --out always wins."""
     sweep = _sweep_mod()
-    assert sweep.resolve_out(None, None, None) == ("DEGEN_SWEEP.json", False)
-    assert sweep.resolve_out("q1,q2", None, None) == (
-        "DEGEN_SWEEP.partial.json", True)
-    assert sweep.resolve_out(None, "hotkey", None) == (
-        "DEGEN_SWEEP.partial.json", True)
+    # The defaults sit in the checkout, not in the working directory.
+    full = os.path.join(ROOT, "DEGEN_SWEEP.json")
+    partial = os.path.join(ROOT, "DEGEN_SWEEP.partial.json")
+    assert sweep.resolve_out(None, None, None) == (full, False)
+    assert sweep.resolve_out("q1,q2", None, None) == (partial, True)
+    assert sweep.resolve_out(None, "hotkey", None) == (partial, True)
     assert sweep.resolve_out("q1", "empty", "X.json") == ("X.json", True)
 
 

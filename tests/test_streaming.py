@@ -423,6 +423,44 @@ def test_topspeed_stream_equals_batch(spark, tmp_path):
     assert got == expected
 
 
+def test_topspeed_stream_sorts_across_arrow_chunks(spark, tmp_path):
+    """Time order is required across micro-batches, not within one: one
+    car's 120 rows arrive newest first in a single micro-batch, which
+    Arrow splits into 7-row chunks. The key's chunks are replayed as one
+    sorted run, so the stream still emits the batch replay's rows."""
+    cars = car_event_simulator(spark, num_cars=1, ticks=120)
+    expected = {tuple(r) for r in top_speed_windowing(cars).collect()}
+
+    rows = cars.orderBy(F.desc("time")).collect()
+    src = str(tmp_path / "in")
+    _write_text_files(
+        src,
+        ["\n".join(f"{r['carId']},{r['speed']},{r['distance']},{r['time']}" for r in rows)],
+        ext="csv",
+    )
+    parts = F.split(F.col("value"), ",")
+    stream = spark.readStream.text(src).select(
+        F.element_at(parts, 1).cast("int").alias("carId"),
+        F.element_at(parts, 2).cast("int").alias("speed"),
+        F.element_at(parts, 3).cast("double").alias("distance"),
+        F.element_at(parts, 4).cast("long").alias("time"),
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        batches = collect_stream(
+            top_speed_windowing_stream(stream),
+            str(tmp_path / "ck"),
+            output_mode="append",
+        )
+    finally:
+        spark.conf.set(key, prev)
+    got = {tuple(r) for batch in batches for r in batch}
+    assert len(expected) > 2
+    assert got == expected
+
+
 def test_topspeed_stream_tws_equals_batch(spark, tmp_path):
     """A6 on the Spark 4 arbitrary-state v2 API: the
     transformWithStateInPandas variant must emit exactly the batch

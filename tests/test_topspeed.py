@@ -3,8 +3,14 @@ semantics from TopSpeedWindowing.scala:104-115)."""
 
 from __future__ import annotations
 
+import math
+import random
+
+import numpy as np
+
 from flink_streaming_2_10_spark.operators.topspeed import (
     _replay,
+    replay_columns,
     top_speed_windowing,
 )
 from flink_streaming_2_10_spark.sources.generators import car_event_simulator
@@ -70,3 +76,58 @@ def test_spark_replay_matches_independent_simulation(spark):
                 best = max(buf, key=lambda e: e.speed)
                 expected.append((car, best.speed, best.distance, best.time))
     assert got == sorted(expected)
+
+
+def _nan_last_key(rec):
+    speed, distance, time = rec
+    return (time, distance, math.isnan(speed), 0.0 if math.isnan(speed) else speed)
+
+
+def _plain(rows):
+    """Rows with NaN as None, so equal replays compare equal."""
+    return [tuple(None if v != v else v for v in r) for r in rows]
+
+
+def test_replay_columns_equals_sorted_replay_randomized():
+    # Pure Python (no JVM). Ties on all three sort keys, NaN speeds and
+    # non-monotone distances; the helper sorts numpy columns in any order
+    # and must match _replay over Python-sorted tuples, also when the rows
+    # come in two calls that carry the buffer and the trigger distance.
+    rng = random.Random(20261019)
+    for trial in range(200):
+        n = rng.randint(1, 60)
+        rows = [
+            (
+                float("nan") if rng.random() < 0.1 else float(rng.randint(0, 4)),
+                float(rng.choice([0.0, 25.0, 50.0, 60.0, 75.5, 130.0, 200.0])),
+                rng.randint(0, 8) * 1000,
+            )
+            for _ in range(n)
+        ]
+        trigger = rng.choice([10.0, 50.0])
+        eviction_ms = rng.choice([1000, 3000, 10_000])
+        ordered = sorted(rows, key=_nan_last_key)
+        want, want_buf, want_last = _replay(
+            ordered, [], None, trigger, eviction_ms
+        )
+
+        def cols(part):
+            part = list(part)
+            rng.shuffle(part)
+            return [np.array(c) for c in zip(*part)] or [np.array([])] * 3
+
+        got, buf, last = replay_columns(*cols(rows), [], None, trigger, eviction_ms)
+        assert (_plain(got), _plain(buf), last) == (
+            _plain(want), _plain(want_buf), want_last
+        ), trial
+
+        cut = rng.randint(0, n)
+        first, buf, last = replay_columns(
+            *cols(ordered[:cut]), [], None, trigger, eviction_ms
+        )
+        second, buf, last = replay_columns(
+            *cols(ordered[cut:]), buf, last, trigger, eviction_ms
+        )
+        assert (_plain(first + second), _plain(buf), last) == (
+            _plain(want), _plain(want_buf), want_last
+        ), trial

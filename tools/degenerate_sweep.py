@@ -38,8 +38,9 @@ Usage::
 
 Exit 0 = no divergence; exit 2 = at least one divergence/error (report
 on stdout either way). A FULL run (no --only/--variant) writes the
-canonical DEGEN_SWEEP.json; PARTIAL runs write DEGEN_SWEEP.partial.json
-so a spot-run can never clobber the canonical record (r17 verdict
+canonical DEGEN_SWEEP.json at the checkout root, from any working
+directory; PARTIAL runs write DEGEN_SWEEP.partial.json there, so a
+spot-run can never clobber the canonical record (r17 verdict
 task 4 — the judge's 4-query spot-run did exactly that). ``--out``
 overrides either default explicitly.
 """
@@ -160,12 +161,12 @@ def compare(a: pd.DataFrame, b: pd.DataFrame) -> str | None:
 def resolve_out(only: str | None, variant: str | None, out: str | None) -> tuple[str, bool]:
     """(summary path, is_partial). Partial runs (--only/--variant) must
     NEVER default to the canonical DEGEN_SWEEP.json — a spot-run would
-    clobber the full 536-entry record (r17 verdict task 4)."""
+    clobber the full 536-entry record (r17 verdict task 4). The defaults
+    live in the checkout whatever the working directory; an explicit
+    ``out`` is kept as given."""
     partial = bool(only or variant)
-    return (
-        out or ("DEGEN_SWEEP.partial.json" if partial else "DEGEN_SWEEP.json"),
-        partial,
-    )
+    default = "DEGEN_SWEEP.partial.json" if partial else "DEGEN_SWEEP.json"
+    return out or os.path.join(ROOT, default), partial
 
 
 def main() -> int:
@@ -179,8 +180,9 @@ def main() -> int:
     ap.add_argument(
         "--out",
         default=None,
-        help="summary path; defaults to DEGEN_SWEEP.json for a full run "
-        "and DEGEN_SWEEP.partial.json when --only/--variant restricts it",
+        help="summary path; defaults to DEGEN_SWEEP.json in the checkout "
+        "for a full run and DEGEN_SWEEP.partial.json there when "
+        "--only/--variant restricts it",
     )
     args = ap.parse_args()
     out_path, partial = resolve_out(args.only, args.variant, args.out)
