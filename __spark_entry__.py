@@ -2052,16 +2052,17 @@ def q_dedup_lsh_recall(
     # 3-gram md5 postings prefix; built ONCE here (guide §5 / §1.2) the
     # truth and sketch pipelines share one cached class table and one
     # cached posting table instead of computing and caching two of each.
-    # Expression-identical to the unshared form — results unchanged.
-    state = collapsed_posting_state(
-        docs, shingle_n=3, hasher="md5"
-    )
+    # Expression-identical to the unshared form — results unchanged. The
+    # state carries its gram size and hasher, and each scorer refuses a
+    # state built with others.
+    n, hasher = 3, "md5"
+    state = collapsed_posting_state(docs, shingle_n=n, hasher=hasher)
     truth = ngram_jaccard_pairs(
-        docs, n=3, threshold=0.7, shared_state=state
+        docs, n=n, threshold=0.7, hasher=hasher, shared_state=state
     ).select("doc_a", "doc_b", F.lit(1).alias("__t"))
     lsh = minhash_dedup_pairs(
-        docs, num_hashes=32, bands=8, rows=4, shingle_n=3,
-        threshold=0.7, hasher="md5", shared_state=state,
+        docs, num_hashes=32, bands=8, rows=4, shingle_n=n,
+        threshold=0.7, hasher=hasher, shared_state=state,
     ).select("doc_a", "doc_b", F.lit(1).alias("__l"))
     joined = truth.join(lsh, ["doc_a", "doc_b"], "full_outer")
     return joined.agg(
@@ -4403,7 +4404,7 @@ def _topspeed_oracle(
     num_cars: int, trigger_meters: float, eviction_sec: int
 ) -> str:
     """DuckDB replica of the A6 trigger/evictor replay (TopSpeedWindowing
-    .scala:104-115, operators/topspeed.py:43-70).
+    .scala:104-115, operators/topspeed.py::_replay).
 
     Key reduction making this SQL-expressible: with time-ascending replay
     the eviction cutoffs are monotone, so the surviving buffer at a fire at

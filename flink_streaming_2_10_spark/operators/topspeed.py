@@ -78,7 +78,11 @@ def _replay(
             cutoff = time - eviction_ms
             buffer[:] = [r for r in buffer if r[2] > cutoff]
             # … then maxBy(speed), first-seen (= earliest in time order).
-            out.append(max(buffer, key=lambda r: r[0]))
+            # A null time or a zero horizon can evict every row, the
+            # firing one too; like Flink's evicting window, an empty
+            # window emits nothing.
+            if buffer:
+                out.append(max(buffer, key=lambda r: r[0]))
     return out, buffer, last_trigger_distance
 
 

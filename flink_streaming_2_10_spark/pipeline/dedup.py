@@ -328,7 +328,7 @@ def collapsed_posting_state(
     shingle_n: int = 3,
     hasher: str = "md5",
     fp_col: str | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+) -> tuple:
     """Build ONCE the ``(nrm, cls, posts)`` prefix every collapse-exact
     dedup scorer starts from: the normalized-fingerprint corpus, the
     persisted exact-duplicate classes (:func:`_exact_classes`), and the
@@ -347,9 +347,10 @@ def collapsed_posting_state(
     form (the state is exactly what the scorer would have built itself,
     with the same persist points), so results are unchanged.
 
-    The consuming scorers must use the SAME ``shingle_n`` and ``hasher``
-    and run with ``collapse_exact=True`` — enforced by the scorers'
-    asserts where cheap; parameter agreement is the caller's contract.
+    The state is ``(nrm, cls, posts, (shingle_n, hasher))``: it carries
+    the parameters its postings were built with, and a consuming scorer
+    raises ``ValueError`` unless its own gram size and hasher match and
+    it runs with ``collapse_exact=True``.
     """
     nrm, cls = _exact_classes(df, id_col, text_col, fp_col=fp_col)
     work = cls.select(
@@ -359,6 +360,22 @@ def collapsed_posting_state(
         _shingles(work, id_col, text_col, shingle_n)
         .select("doc_id", _hash60(F.col("shingle"), hasher).alias("h"))
     )
+    return nrm, cls, posts, (shingle_n, hasher)
+
+
+def _shared_prefix(
+    state: tuple, shingle_n: int, hasher: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``(nrm, cls, posts)`` of a :func:`collapsed_posting_state` built
+    with this ``shingle_n`` and ``hasher``; ``ValueError`` otherwise —
+    postings of other grams or another hash would silently score
+    different sets."""
+    nrm, cls, posts, params = state
+    if params != (shingle_n, hasher):
+        raise ValueError(
+            f"shared_state was built with (shingle_n, hasher) = {params}, "
+            f"not {(shingle_n, hasher)}"
+        )
     return nrm, cls, posts
 
 
@@ -371,7 +388,7 @@ def ngram_jaccard_pairs(
     max_df: int | float | None = DEFAULT_MAX_DF_FRAC,
     hasher: str = "md5",
     collapse_exact: bool = True,
-    shared_state: tuple[DataFrame, DataFrame, DataFrame] | None = None,
+    shared_state: tuple | None = None,
 ) -> DataFrame:
     """All document pairs with n-gram-set Jaccard ≥ threshold — exact
     over the (optionally stop-gram-pruned) gram sets.
@@ -406,9 +423,9 @@ def ngram_jaccard_pairs(
 
     ``shared_state`` optionally supplies a precomputed
     :func:`collapsed_posting_state` (requires ``collapse_exact=True``
-    and matching ``n``/``hasher``) so a composing query shares the
-    corpus → classes → postings prefix with a sibling scorer instead of
-    rebuilding it.
+    and the same ``n``/``hasher``, else ``ValueError``) so a composing
+    query shares the corpus → classes → postings prefix with a sibling
+    scorer instead of rebuilding it.
 
     Jaccard is emitted as exact integer fields (inter, size_a, size_b) plus
     a derived double — division of exact longs, deterministic for oracles.
@@ -475,7 +492,7 @@ def _ngram_pair_counts(
     max_df: int | float | None,
     hasher: str,
     collapse_exact: bool,
-    shared_state: tuple[DataFrame, DataFrame, DataFrame] | None = None,
+    shared_state: tuple | None = None,
 ) -> DataFrame:
     """Shared inverted-index pair machinery for the exact n-gram scorers:
     ``(doc_a, doc_b, inter, size_a, size_b)`` for every pair sharing ≥ 1
@@ -488,7 +505,7 @@ def _ngram_pair_counts(
     if shared_state is not None:
         if not collapse_exact:
             raise ValueError("shared_state requires collapse_exact=True")
-        nrm, cls, posts = shared_state
+        nrm, cls, posts = _shared_prefix(shared_state, n, hasher)
         work = cls.select(
             F.col("__rep").alias(id_col), F.col("__rep_text").alias(text_col)
         )
@@ -588,6 +605,22 @@ def _ngram_pair_counts(
 # ---------------------------------------------------------------------------
 
 
+def _minhash_sig(num_hashes: int) -> Column:
+    """``sig``: the K MinHash mins over a posting hash column ``h``,
+    ``min((a_i·(h mod p) + b_i) mod p)``, as one aggregate array.
+
+    One SQL string instead of K Column trees: the driver sends one parse
+    instead of several py4j commands per node. The constants parse as
+    INT literals, as ``F.lit`` types them, so the plan computes exactly
+    what the Column form did."""
+    p = _MERSENNE_31
+    mins = ", ".join(
+        f"min(pmod({a} * pmod(h, {p}) + {b}, {p}))"
+        for a, b in minhash_perm_params(num_hashes)
+    )
+    return F.expr(f"array({mins}) AS sig")
+
+
 def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -604,20 +637,11 @@ def minhash_signatures(
     exchange and a single digest per posting regardless of K; signature
     size is K longs per doc.
     """
-    sh = _shingles(df, id_col, text_col, shingle_n)
-    hashed = sh.select(
-        "doc_id", _base_hash(F.col("shingle"), hasher).alias("h")
-    )
-    mins = [
-        F.min(
-            F.pmod(F.lit(a) * F.col("h") + F.lit(b), F.lit(_MERSENNE_31))
-        ).alias(f"g{i}")
-        for i, (a, b) in enumerate(minhash_perm_params(num_hashes))
-    ]
-    agg = hashed.groupBy("doc_id").agg(*mins)
-    return agg.select(
-        "doc_id",
-        F.array(*[F.col(f"g{i}") for i in range(num_hashes)]).alias("sig"),
+    return (
+        _shingles(df, id_col, text_col, shingle_n)
+        .select("doc_id", _hash60(F.col("shingle"), hasher).alias("h"))
+        .groupBy("doc_id")
+        .agg(_minhash_sig(num_hashes))
     )
 
 
@@ -628,62 +652,39 @@ def minhash_banding(
     hash_buckets: bool = True,
     validate: bool = True,
 ) -> DataFrame:
-    """``(doc_id, band, bucket)`` — one row per (doc, band), the LSH
-    banding of a ``(doc_id, sig)`` signature table. Shared by the
-    in-corpus self-join (:func:`minhash_lsh_candidates`) and the
-    persistent incremental index (``pipeline/neardup_index.py``), so
-    both produce IDENTICAL buckets for identical signatures.
+    """``(doc_id, ..., band, bucket)`` — one row per (doc, band), the LSH
+    banding of a ``(doc_id, sig)`` signature table; every column besides
+    ``sig`` is carried along. Shared by the in-corpus self-join
+    (:func:`minhash_lsh_candidates`) and the persistent incremental index
+    (``pipeline/neardup_index.py``), so both produce IDENTICAL buckets for
+    identical signatures.
 
     ``validate`` guards bands×rows against the runtime signature length
     (a mismatch would otherwise read past the array: NULL slots that
-    ``concat_ws`` silently skips, corrupting band buckets)."""
-    # Fail fast on a banding mismatch. Array length isn't in the schema,
-    # so guard inside the bucket expression: assert_true evaluates per row
-    # before any band slice is read, turning silent corruption into an
-    # immediate, explainable job failure.
-    sig_guard = F.assert_true(
-        F.size("sig") == bands * rows,
-        F.concat(
-            F.lit(f"minhash_banding: bands*rows = {bands * rows} "
-                  f"!= signature length "),
-            F.size("sig").cast("string"),
-        ),
-    )
+    ``concat_ws`` silently skips, corrupting band buckets). The check is
+    the generator's input, ``if(size(sig) = bands*rows, <bands>,
+    raise_error(...))``, so no optimizer rule can prune or fold it, and
+    no band slice is read before it passes."""
 
-    def band_bucket(b: int) -> Column:
-        key = F.concat_ws(
-            ",",
-            *[
-                F.element_at("sig", b * rows + r + 1).cast("string")
-                for r in range(rows)
-            ],
-        )
-        return F.xxhash64(key).cast("string") if hash_buckets else key
+    def bucket(b: int) -> str:
+        key = "concat_ws(',', " + ", ".join(
+            f"CAST(element_at(sig, {b * rows + r + 1}) AS STRING)"
+            for r in range(rows)
+        ) + ")"
+        return f"CAST(xxhash64({key}) AS STRING)" if hash_buckets else key
 
-    # The guard must live inside an expression the plan keeps, or column
-    # pruning would drop it — fold it into band 0's index (+0 when valid).
-    guard_zero = (
-        sig_guard.isNull().cast("int") * F.lit(0) if validate else F.lit(0)
-    )
-    return (
-        signatures.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            (F.lit(b) + (guard_zero if b == 0 else F.lit(0))).alias(
-                                "band"
-                            ),
-                            band_bucket(b).alias("bucket"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bb"),
+    bands_sql = "array(" + ", ".join(
+        f"struct({b} AS band, {bucket(b)} AS bucket)" for b in range(bands)
+    ) + ")"
+    if validate:
+        n = bands * rows
+        bands_sql = (
+            f"if(size(sig) = {n}, {bands_sql}, raise_error(concat("
+            f"'minhash_banding: bands*rows = {n} != signature length ', "
+            f"CAST(size(sig) AS STRING))))"
         )
-        .select("doc_id", "bb.band", "bb.bucket")
-    )
+    carried = [f"`{c}`" for c in signatures.columns if c != "sig"]
+    return signatures.selectExpr(*carried, f"inline({bands_sql})")
 
 
 def minhash_lsh_candidates(
@@ -695,8 +696,10 @@ def minhash_lsh_candidates(
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """LSH banding: docs whose signature agrees on ALL rows of at least one
-    band become a candidate pair. bands×rows must equal signature length —
-    validated against the ``sig`` array's element count (a mismatch would
+    band become a candidate pair ``(doc_a, doc_b)``, followed by each
+    further column ``c`` of ``signatures`` (besides ``sig``) as ``c_a``
+    and ``c_b``. bands×rows must equal signature length — validated
+    against the ``sig`` array's element count (a mismatch would
     otherwise read past the array: NULL slots that ``concat_ws`` silently
     skips, corrupting band buckets).
 
@@ -737,20 +740,25 @@ def minhash_lsh_candidates(
         # exchange+sort instead of paying a separate aggregation pass
         # plus a broadcast anti-join (measured ~15% cheaper at sf0.1,
         # and one fewer traversal of the banding subtree at any scale).
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band", "bucket")
         banded = (
-            banded.withColumn("__bs", F.count(F.lit(1)).over(w))
-            .filter(F.col("__bs") <= max_bucket_size)
+            banded.selectExpr(
+                "*", "count(1) OVER (PARTITION BY band, bucket) AS __bs"
+            )
+            .filter(f"__bs <= {max_bucket_size}")
             .drop("__bs")
         )
-    left = banded.select("band", "bucket", F.col("doc_id").alias("doc_a"))
-    right = banded.select("band", "bucket", F.col("doc_id").alias("doc_b"))
+    carried = [c for c in banded.columns if c not in ("doc_id", "band", "bucket")]
+
+    def side(s: str) -> DataFrame:
+        return banded.selectExpr(
+            "band", "bucket", f"doc_id AS doc_{s}",
+            *[f"`{c}` AS `{c}_{s}`" for c in carried],
+        )
+
     return (
-        left.join(right, ["band", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
+        side("a").join(side("b"), ["band", "bucket"])
+        .filter("doc_a < doc_b")
+        .select("doc_a", "doc_b", *[f"{c}_{s}" for s in "ab" for c in carried])
         .distinct()
     )
 
@@ -768,7 +776,7 @@ def minhash_dedup_pairs(
     collapse_exact: bool = True,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
     fp_col: str | None = None,
-    shared_state: tuple[DataFrame, DataFrame, DataFrame] | None = None,
+    shared_state: tuple | None = None,
 ) -> DataFrame:
     """End-to-end MinHash-LSH near-dup detection: signatures → banded
     candidates → verify candidates with the exact n-gram Jaccard (computed
@@ -796,8 +804,9 @@ def minhash_dedup_pairs(
     fingerprint column (see :func:`_exact_classes`).
     ``shared_state`` optionally supplies a precomputed
     :func:`collapsed_posting_state` (requires ``collapse_exact=True``
-    and matching ``shingle_n``/``hasher``) so a composing query shares
-    the corpus → classes → postings prefix with a sibling scorer.
+    and the same ``shingle_n``/``hasher``, else ``ValueError``) so a
+    composing query shares the corpus → classes → postings prefix with a
+    sibling scorer.
     """
     if bands * rows != num_hashes:
         raise ValueError(
@@ -810,64 +819,45 @@ def minhash_dedup_pairs(
     work = df
     if collapse_exact:
         if shared_state is not None:
-            nrm, cls, _ = shared_state
+            nrm, cls, posts = _shared_prefix(shared_state, shingle_n, hasher)
         else:
             nrm, cls = _exact_classes(df, id_col, text_col, fp_col=fp_col)
-        work = cls.select(
-            F.col("__rep").alias(id_col), F.col("__rep_text").alias(text_col)
-        )
+        work = cls.selectExpr(f"__rep AS `{id_col}`", f"__rep_text AS `{text_col}`")
         multi = cls.filter(
-            (F.col("__m") > 1)
-            & (F.expr(f"size({_words_sql('__rep_text')})") >= shingle_n)
+            f"__m > 1 AND size({_words_sql('__rep_text')}) >= {shingle_n}"
         ).select("__nfp", "__rep")
         star = (
-            nrm.select(F.col(id_col), "__nfp")
+            nrm.select(id_col, "__nfp")
             .join(multi, "__nfp")
-            .filter(F.col(id_col) != F.col("__rep"))
-            .select(
-                F.col("__rep").alias("doc_a"),
-                F.col(id_col).alias("doc_b"),
-                F.lit(1.0).cast("double").alias("jaccard"),
+            .filter(f"`{id_col}` != __rep")
+            .selectExpr(
+                "__rep AS doc_a", f"`{id_col}` AS doc_b",
+                "CAST(1.0 AS DOUBLE) AS jaccard",
             )
         )
     # One digest per posting: the 60-bit hash is BOTH the verify-join key
     # (8-byte shuffles instead of shingle strings) and, reduced mod p, the
     # MinHash base value the K affine permutations act on.
-    if shared_state is not None:
-        posts = shared_state[2]
-    else:
+    if shared_state is None:
         posts = tracked_persist(
             _shingles(work, id_col, text_col, shingle_n)
             .select("doc_id", _hash60(F.col("shingle"), hasher).alias("h"))
         )
-    base = F.pmod(F.col("h"), F.lit(_MERSENNE_31))
-    mins = [
-        F.min(
-            F.pmod(F.lit(a) * base + F.lit(b), F.lit(_MERSENNE_31))
-        ).alias(f"g{i}")
-        for i, (a, b) in enumerate(minhash_perm_params(num_hashes))
-    ]
     # ONE grouped pass computes the K signature mins AND the gram-set
-    # size: signatures and sizes group on the same key over the same
-    # postings, and as separate aggregations they are two full posting
-    # passes + two exchanges (different aggregate lists, so runtime
-    # ReusedExchange cannot dedupe them — guide §1.2/§2.4). set_size
-    # rides the signature aggregation as one extra count field; the
-    # PERSIST is what makes the fusion stick — without it Catalyst's
-    # per-consumer column pruning splits the aggregate back into a
-    # 32-func copy (banding) and a count-only copy (sizes), restoring
-    # both passes (verified in the r19 before/after plans).
-    sig_sz = tracked_persist(
+    # size: as separate aggregations they are two full posting passes +
+    # two exchanges (different aggregate lists, so runtime ReusedExchange
+    # cannot dedupe them — guide §1.2/§2.4). The size then rides banding
+    # and the band self-join as ``size_a``/``size_b``, so the verify step
+    # needs no sizes join. Persisted because pair consumers such as
+    # connected components read the pairs in several jobs, and each
+    # would otherwise aggregate the postings again.
+    sigs = tracked_persist(
         posts.groupBy("doc_id").agg(
-            *mins, F.count(F.lit(1)).alias("set_size")
+            _minhash_sig(num_hashes), F.expr("count(1) AS size")
         )
     )
-    sigs = sig_sz.select(
-        "doc_id",
-        F.array(*[F.col(f"g{i}") for i in range(num_hashes)]).alias("sig"),
-    )
-    # validate=False: sigs' array() length == num_hashes by construction
-    # and bands*rows == num_hashes was checked above — plan-time proof, no
+    # validate=False: sig is an array() of exactly num_hashes mins and
+    # bands*rows == num_hashes was checked above — plan-time proof, no
     # per-row guard expression in the banding stage.
     cands = minhash_lsh_candidates(
         sigs,
@@ -877,8 +867,7 @@ def minhash_dedup_pairs(
         validate=False,
         max_bucket_size=max_bucket_size,
     )
-    sizes = sig_sz.select("doc_id", "set_size")
-    a = posts.select(F.col("doc_id").alias("doc_a"), "h")
+    a = posts.selectExpr("doc_id AS doc_a", "h")
     # NOTE (measured and rejected, r19): pre-pruning this side to
     # candidate docs with a broadcast semi-join (guide §3.2) — so the
     # (doc_b, h) join shuffles candidate-doc postings instead of the
@@ -888,25 +877,21 @@ def minhash_dedup_pairs(
     # cost more than the exchange it saves at this scale. On a cluster
     # where the posting exchange is network-bound and candidates ≪
     # corpus the trade reverses; re-measure there before adopting.
-    b = posts.select(F.col("doc_id").alias("doc_b"), "h")
+    b = posts.selectExpr("doc_id AS doc_b", "h")
     # Intersection restricted to candidate pairs: attach A-side postings,
     # then inner-join the B side on (doc_b, h) — the join key carries both
     # the pair identity and the posting, one exchange, no cross blowup.
-    inter = (
+    verified = (
         cands.join(a, ["doc_a"])
         .join(b, ["doc_b", "h"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("set_size").alias("size_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("set_size").alias("size_b"))
-    union = F.col("size_a") + F.col("size_b") - F.col("inter")
-    verified = (
-        inter.join(sa, ["doc_a"])
-        .join(sb, ["doc_b"])
-        .withColumn("jaccard", F.col("inter").cast("double") / union.cast("double"))
+        .groupBy("doc_a", "doc_b", "size_a", "size_b")
+        .agg(F.expr("count(1) AS inter"))
+        .selectExpr(
+            "doc_a", "doc_b",
+            "CAST(inter AS DOUBLE) / CAST(size_a + size_b - inter AS DOUBLE)"
+            " AS jaccard",
+        )
         .filter(F.col("jaccard") >= F.lit(threshold))
-        .select("doc_a", "doc_b", "jaccard")
     )
     return verified if star is None else verified.unionByName(star)
 

@@ -12,7 +12,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from flink_streaming_2_10_spark.catalog import load_table
+from flink_streaming_2_10_spark.pipeline.caching import release_cached
 from flink_streaming_2_10_spark.pipeline.dedup import (
+    collapsed_posting_state,
     exact_dedup,
     minhash_dedup_pairs,
     minhash_lsh_candidates,
@@ -203,7 +205,7 @@ def test_ngram_jaccard_fractional_max_df_engages(spark):
     assert full.count() == 45  # all 10·9/2 pairs share the stop tokens
 
 
-def test_minhash_banding_mismatch_fails_fast(corpus):
+def test_minhash_banding_mismatch_fails_fast(spark, corpus):
     # Composition-level check: bands*rows must equal num_hashes.
     with pytest.raises(ValueError, match="bands\\*rows"):
         minhash_dedup_pairs(corpus, num_hashes=32, bands=16, rows=4)
@@ -217,6 +219,68 @@ def test_minhash_banding_mismatch_fails_fast(corpus):
         Exception, match="signature length|ArrayIndexOutOfBounds|INVALID_ARRAY_INDEX"
     ):
         minhash_lsh_candidates(sigs, bands=16, rows=4).collect()
+    # Without ANSI an out-of-range element_at is a silent NULL, so only
+    # the guard itself can fail the job.
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        with pytest.raises(Exception, match="signature length"):
+            minhash_lsh_candidates(sigs, bands=16, rows=4).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
+def test_shared_state_parameter_mismatch_raises(corpus):
+    state = collapsed_posting_state(corpus, shingle_n=3, hasher="md5")
+    with pytest.raises(ValueError, match="shingle_n, hasher"):
+        minhash_dedup_pairs(
+            corpus, num_hashes=32, bands=8, rows=4, shingle_n=2,
+            hasher="md5", shared_state=state,
+        )
+    with pytest.raises(ValueError, match="shingle_n, hasher"):
+        minhash_dedup_pairs(
+            corpus, num_hashes=32, bands=8, rows=4, shingle_n=3,
+            hasher="xxhash64", shared_state=state,
+        )
+    with pytest.raises(ValueError, match="shingle_n, hasher"):
+        ngram_jaccard_pairs(corpus, n=1, hasher="md5", shared_state=state)
+    # Matching parameters are accepted.
+    ngram_jaccard_pairs(corpus, n=3, max_df=None, hasher="md5", shared_state=state)
+    release_cached()
+
+
+def test_minhash_pair_plan_builds_in_few_py4j_calls(spark, corpus, monkeypatch):
+    """Building the pair plan is driver work only: no job, and one py4j
+    command per SQL expression string rather than several per Column
+    node. With a Column tree for each of the 32 mins and each band slot
+    the build sent 4,475 commands."""
+    from py4j import protocol
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent: list[str] = []
+
+    def counting(command, *args, **kwargs):
+        # Memory commands free Python-side proxies as the garbage
+        # collector finds them: their number is not plan work.
+        if not command.startswith(protocol.MEMORY_COMMAND_NAME):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    tracker = spark.sparkContext.statusTracker()
+    spark.sparkContext.setJobGroup("pair-plan-build", "pair plan build")
+    try:
+        monkeypatch.setattr(client, "send_command", counting)
+        minhash_dedup_pairs(
+            corpus, num_hashes=32, bands=8, rows=4, shingle_n=3,
+            threshold=0.7, hasher="md5",
+        )
+        monkeypatch.undo()
+        assert tracker.getJobIdsForGroup("pair-plan-build") == []
+    finally:
+        spark.sparkContext.setJobGroup(None, None)
+        release_cached()
+    assert len(sent) < 4475 // 2, len(sent)
 
 
 def test_ngram_jaccard_unpruned_refused_at_scale(spark, monkeypatch):

@@ -43,6 +43,18 @@ def test_replay_first_seen_tie_break():
     assert out == [(42, 30.0, 1000)]
 
 
+def test_replay_fire_on_emptied_window_emits_nothing():
+    # The evictor empties the buffer, the firing row included: a null
+    # (NaN) time compares false against every cutoff, and a zero horizon
+    # keeps only rows newer than the firing row itself.
+    out, buf, last = _replay(
+        [(1, 0.0, 0), (2, 100.0, math.nan)], [], None, 50.0, 10_000
+    )
+    assert (out, buf, last) == ([], [], 100.0)
+    out, buf, last = _replay([(1, 0.0, 0), (2, 100.0, 1000)], [], None, 50.0, 0)
+    assert (out, buf, last) == ([], [], 100.0)
+
+
 def test_output_rows_are_subset_of_input(spark):
     cars = car_event_simulator(spark, num_cars=2, ticks=200, seed=7)
     out = top_speed_windowing(cars, trigger_meters=50.0, eviction_sec=10)
