@@ -32,6 +32,7 @@ O(events / eviction window), independent of total history length.
 
 from __future__ import annotations
 
+import json
 from typing import Iterator
 
 import numpy as np
@@ -46,10 +47,9 @@ _SCHEMA = "carId int, speed int, distance double, time long"
 _ARROW_SCHEMA = pa.schema(
     zip(OUTPUT_COLUMNS, [pa.int32(), pa.int32(), pa.float64(), pa.int64()])
 )
-_STATE_SCHEMA = (
-    "last_distance double, buf_speed array<int>, buf_distance array<double>, "
-    "buf_time array<long>"
-)
+# Flat on purpose: a state row holding arrays makes Spark recompile its
+# state codec (two Janino classes) on every micro-batch.
+_STATE_SCHEMA = "last_distance double, buffer string"
 
 
 def _replay(
@@ -174,12 +174,16 @@ def _replay_micro_batch(
     order must hold across the split. Replays them after ``stored`` (the
     state tuple, ``None`` for a new key) and returns (emitted rows as a
     frame, or ``None`` when nothing fired; the new state tuple).
+
+    The state tuple is ``(last_distance, buffer)`` with the buffer as a
+    JSON string of its speed, distance and time columns: JSON round-trips
+    Python ints, floats and NaN exactly.
     """
     if stored is None:
         last_distance, buffer = None, []
     else:
-        last_distance, bs, bd, bt = stored
-        buffer = list(zip(bs, bd, bt))
+        last_distance, encoded = stored
+        buffer = list(zip(*json.loads(encoded)))
     frames = list(chunks)
     pdf = pd.concat(frames) if len(frames) > 1 else frames[0]
     emitted, buffer, last_distance = replay_columns(
@@ -195,7 +199,7 @@ def _replay_micro_batch(
     if emitted:
         columns = [[car] * len(emitted), *_columns(emitted)]
         out = pd.DataFrame(dict(zip(OUTPUT_COLUMNS, columns)))
-    return out, (last_distance, *_columns(buffer))
+    return out, (last_distance, json.dumps(_columns(buffer), separators=(",", ":")))
 
 
 def top_speed_windowing_stream(

@@ -85,6 +85,15 @@ def configure(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def default_driver_memory(physical_bytes: int | None = None) -> str:
+    """Half of physical memory (this host's by default) in whole GiB,
+    between 1g and 16g: the driver JVM also runs the executors, so a
+    heap larger than the host lets the kernel kill it under load."""
+    if physical_bytes is None:
+        physical_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16, max(1, physical_bytes // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "flink-streaming-2-10-spark",
     cpus: int | str | None = None,
@@ -111,8 +120,20 @@ def get_spark(
       store commit took 25-50 ms on a 4-core host. ``get_spark`` only
       makes ``local[...]`` sessions, so the setting only meets local disk;
       sessions set up through ``configure()`` keep Spark's default.
+
+    Python workers start from this package's daemon,
+    :mod:`flink_streaming_2_10_spark.worker_daemon`, named as
+    ``spark.python.daemon.module``: it stops each Python task from
+    re-reading ``pyspark.zip`` once per zip importer. The daemon and its
+    workers import the package through ``spark.executorEnv.PYTHONPATH``,
+    which holds this checkout's root, so UDF-bearing queries run from any
+    working directory.
+
+    The driver heap is :func:`default_driver_memory` of this host unless
+    ``$SPARK_GRAFT_DRIVER_MEM`` names one.
     """
     cpus = int(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    checkout = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -122,7 +143,14 @@ def get_spark(
             "org.apache.spark.sql.execution.streaming.checkpointing."
             "FileSystemBasedCheckpointFileManager",
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
+        .config(
+            "spark.python.daemon.module", "flink_streaming_2_10_spark.worker_daemon"
+        )
+        .config("spark.executorEnv.PYTHONPATH", checkout)
         .config("spark.ui.enabled", "false")
         # No console progress bar: its \r-frames interleave with stdout
         # capture and have clipped the driver's tail-parse of bench.py's

@@ -461,6 +461,49 @@ def test_topspeed_stream_sorts_across_arrow_chunks(spark, tmp_path):
     assert got == expected
 
 
+def test_topspeed_stream_compiles_no_classes_per_micro_batch(spark, tmp_path):
+    """TopSpeed's state row is flat. A state row holding arrays made Spark
+    compile two classes (its state codec) on every micro-batch; once warm,
+    a micro-batch now compiles none."""
+    compiled = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = compiled.METRIC_COMPILATION_TIME()
+    value = F.col("value")
+    cars = (
+        spark.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", 200)
+        .option("numPartitions", 2)
+        .load()
+        .select(
+            (value % 4).cast("int").alias("carId"),
+            (value % 37).cast("int").alias("speed"),
+            (value * 7.0).alias("distance"),
+            (value * 100).alias("time"),
+        )
+    )
+    counts: list[int] = []
+
+    def on_batch(bdf, batch_id: int) -> None:
+        bdf.collect()
+        counts.append(compiled.getCount())
+
+    query = (
+        top_speed_windowing_stream(cars)
+        .writeStream.outputMode("append")
+        .foreachBatch(on_batch)
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .start()
+    )
+    try:
+        deadline = time.time() + 120
+        while len(counts) < 6 and time.time() < deadline and query.isActive:
+            time.sleep(0.2)
+    finally:
+        query.stop()
+    assert len(counts) >= 6, (counts, query.exception())
+    # Batches 0-1 warm up (first state load, first emit); the rest reuse.
+    assert counts[5] == counts[1], counts
+
+
 def test_topspeed_stream_tws_equals_batch(spark, tmp_path):
     """A6 on the Spark 4 arbitrary-state v2 API: the
     transformWithStateInPandas variant must emit exactly the batch

@@ -3,13 +3,16 @@ semantics from TopSpeedWindowing.scala:104-115)."""
 
 from __future__ import annotations
 
+import json
 import math
 import random
 
 import numpy as np
+import pandas as pd
 
 from flink_streaming_2_10_spark.operators.topspeed import (
     _replay,
+    _replay_micro_batch,
     replay_columns,
     top_speed_windowing,
 )
@@ -143,3 +146,46 @@ def test_replay_columns_equals_sorted_replay_randomized():
         assert (_plain(first + second), _plain(buf), last) == (
             _plain(want), _plain(want_buf), want_last
         ), trial
+
+
+def test_micro_batch_state_is_flat_and_carries_exactly():
+    # Pure Python (no JVM). The streaming state is two scalars: the last
+    # trigger distance and the buffer as a JSON string. Carried across
+    # micro-batches (the second split into two Arrow chunks), it must give
+    # what one replay gives, NaN speeds and arbitrary doubles included.
+    rng = random.Random(20261020)
+    for trial in range(50):
+        n = rng.randint(3, 60)
+        rows = [
+            (
+                float("nan") if rng.random() < 0.1 else float(rng.randint(0, 200)),
+                rng.random() * 400,
+                rng.randint(0, 30) * 1000 + 2**40,
+            )
+            for _ in range(n)
+        ]
+        rows.sort(key=_nan_last_key)
+        want, want_buf, _ = replay_columns(
+            *[np.array(c) for c in zip(*rows)], [], None, 50.0, 10_000
+        )
+
+        def frame(part):
+            return pd.DataFrame(part, columns=["speed", "distance", "time"])
+
+        cut = rng.randint(1, n - 2)
+        split = rng.randint(cut + 1, n - 1)
+        out1, stored = _replay_micro_batch(
+            7, iter([frame(rows[:cut])]), None, 50.0, 10_000
+        )
+        assert isinstance(stored[0], float) and isinstance(stored[1], str)
+        out2, stored = _replay_micro_batch(
+            7, iter([frame(rows[cut:split]), frame(rows[split:])]), stored, 50.0, 10_000
+        )
+        got = [
+            tuple(r)[1:]
+            for out in (out1, out2)
+            if out is not None
+            for r in out.itertuples(index=False)
+        ]
+        assert _plain(got) == _plain(want), trial
+        assert _plain(zip(*json.loads(stored[1]))) == _plain(want_buf), trial

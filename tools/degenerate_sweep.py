@@ -216,12 +216,6 @@ def main() -> int:
                 )
             dirs[v] = d
 
-        # Python workers import from their own PYTHONPATH, not this sys.path:
-        # without it, UDF-bearing queries fail with ModuleNotFoundError when
-        # the sweep runs outside the checkout.
-        os.environ["PYTHONPATH"] = os.pathsep.join(
-            p for p in (ROOT, os.environ.get("PYTHONPATH", "")) if p
-        )
         spark = get_spark("degenerate-sweep", cpus=8)
         results: dict[str, dict[str, dict]] = {}
         n_div = n_err = n_ok = n_rowsonly = 0

@@ -32,12 +32,6 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     sys.path.insert(0, ROOT)
-    # Python workers import from their own PYTHONPATH, not this sys.path:
-    # without it, UDF-bearing queries fail with ModuleNotFoundError when
-    # the check runs outside the checkout.
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        p for p in (ROOT, os.environ.get("PYTHONPATH", "")) if p
-    )
     import __spark_entry__ as entrymod
     from flink_streaming_2_10_spark.session import get_spark
 
