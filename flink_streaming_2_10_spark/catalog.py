@@ -24,24 +24,19 @@ TABLES = (
 )
 
 
-#: Per-session memo of loaded-table PLANS (not data): keyed by the
+#: Per-application memo of loaded-table PLANS (not data): keyed by the
 #: session's applicationId so a stopped/rebuilt session can never serve
-#: another session's DataFrames. ``spark.read.parquet`` costs ~100-250 ms
+#: an earlier application's DataFrames. ``spark.read.parquet`` costs ~100-250 ms
 #: per call on the driver (footer/schema read + py4j chatter) and the
 #: query registry calls ``load_table`` ~200 times per bench pass over the
 #: same ten immutable files — pure fixed overhead at any scale. The memo
 #: reuses the analyzed scan PLAN; every execution still reads the parquet
 #: data in full (nothing is materialized or cached data-side), so query
 #: results are byte-identical. Contract: an sf_dir's files are immutable
-#: for the life of a session (true for the driver's testdata); callers
-#: that rewrite a table under a live session must call
-#: :func:`clear_table_cache`.
+#: for the life of a session. Sessions of one application share the
+#: memo: a hit returns the plan of the session that first loaded the
+#: table.
 _PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def clear_table_cache() -> None:
-    """Drop all memoized table plans (for tests that rewrite testdata)."""
-    _PLAN_CACHE.clear()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -58,11 +53,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       session is pinned to UTC (session.py), so casting NTZ→TIMESTAMP
       preserves wall time == epoch semantics exactly.
     """
-    configure(spark)
     key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), name)
     cached = _PLAN_CACHE.get(key)
     if cached is not None:
         return cached
+    # Once per (application, table): sessions get_spark did not build (the
+    # driver's) need RUNTIME_CONF for events.ts and UTC.
+    configure(spark)
     df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # Integer division (`div`), NOT `/`: float division of ~1.7e18 ns

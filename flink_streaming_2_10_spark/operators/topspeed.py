@@ -17,10 +17,9 @@ replay. :func:`replay_columns` sorts one car's ``speed``, ``distance`` and
 ``time`` columns once by (time, distance, speed) and feeds them, as native
 Python values, to the ``_replay`` state machine. The batch path runs it
 per car through ``applyInArrow`` (an Arrow table in, an Arrow table out).
-The streaming paths, ``applyInPandasWithState`` and the v2
-``transformWithStateInPandas``, concatenate a key's chunks within a
-micro-batch, run the same helper and carry (buffer, last-trigger) state
-across micro-batches.
+The streaming path, ``applyInPandasWithState``, concatenates a key's
+chunks within a micro-batch, runs the same helper and carries (buffer,
+last-trigger) state across micro-batches.
 
 Scale notes: one hash exchange on the key; the Python stage is
 Arrow-batched, one Arrow table (batch) or one set of pandas chunks
@@ -167,7 +166,7 @@ def _replay_micro_batch(
     trigger_meters: float,
     eviction_ms: int,
 ) -> tuple[pd.DataFrame | None, tuple]:
-    """One key's micro-batch on either streaming path.
+    """One key's micro-batch on the streaming path.
 
     Concatenates the key's chunks before sorting: Arrow splits a large
     group at ``spark.sql.execution.arrow.maxRecordsPerBatch``, and time
@@ -240,82 +239,5 @@ def top_speed_windowing_stream(
             stateStructType=_STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def transform_with_state_available() -> bool:
-    """True when the arbitrary-state v2 API is RUNNABLE here: the PySpark
-    classes exist (Spark 4.0+) AND the ``google.protobuf`` runtime they
-    depend on imports — transformWithStateInPandas launches a streaming
-    Python driver worker that speaks protobuf to the JVM, and a missing/
-    broken protobuf crashes that worker at query start, not at import."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        from pyspark.sql.streaming.stateful_processor import (  # noqa: F401
-            StatefulProcessor,
-        )
-
-        return True
-    except ImportError:
-        return False
-
-
-def top_speed_windowing_stream_tws(
-    df: DataFrame,
-    trigger_meters: float = 50.0,
-    eviction_sec: int = 10,
-):
-    """Streaming path on the Spark 4 arbitrary-state v2 API
-    (``transformWithStateInPandas`` + ``StatefulProcessor``): the same
-    replay, with the (buffer, last-trigger) tuple held in a named
-    ``ValueState`` instead of the single opaque ``GroupState``, and the
-    same ordering contract as :func:`top_speed_windowing_stream`.
-    Identical output to it — the parity test runs whichever API the
-    container provides and compares against the batch replay.
-
-    Gate on :func:`transform_with_state_available` — it also verifies the
-    ``google.protobuf`` runtime the API's streaming Python driver worker
-    needs (a broken protobuf crashes the worker at query START, after
-    this builder returns). Requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass`` →
-    ``...state.RocksDBStateStoreProvider``) — the v2 API does not run on
-    the default HDFS-backed store; set it on the session before starting
-    the query (tests do; rocksdbjni ships with Spark 4).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    eviction_ms = eviction_sec * 1000
-
-    class _TopSpeedProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("replay", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            out, stored = _replay_micro_batch(
-                key[0],
-                rows,
-                self._state.get() if self._state.exists() else None,
-                trigger_meters,
-                eviction_ms,
-            )
-            self._state.update(stored)
-            if out is not None:
-                yield out
-
-        def close(self) -> None:
-            pass
-
-    return (
-        df.select(*OUTPUT_COLUMNS)
-        .groupBy("carId")
-        .transformWithStateInPandas(
-            statefulProcessor=_TopSpeedProcessor(),
-            outputStructType=_SCHEMA,
-            outputMode="append",
-            timeMode="None",
         )
     )

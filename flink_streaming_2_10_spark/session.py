@@ -14,8 +14,9 @@ import os
 from pyspark.sql import SparkSession
 
 #: Configs that are safe to set on a live session (all are SQLConf /
-#: runtime-settable). ``configure()`` applies them to sessions we did not
-#: build ourselves (e.g. the driver's).
+#: runtime-settable). ``get_spark`` passes them to its builder;
+#: ``configure()`` applies them to sessions built elsewhere (the driver's),
+#: which ``catalog.load_table`` does on a table's first load.
 RUNTIME_CONF: dict[str, str] = {
     # The driver's testdata writes events.ts as parquet TIMESTAMP(NANOS),
     # which Spark's reader rejects by default; read it as a long and convert
@@ -68,20 +69,14 @@ def enable_rocksdb_state(spark: SparkSession) -> SparkSession:
 
 
 def configure(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine conf to an existing session."""
+    """Apply :data:`RUNTIME_CONF` to an existing session.
+
+    Raises if a key cannot be set: a session left without
+    ``nanosAsLong`` or the UTC zone fails later, in a query, with an
+    unclear error.
+    """
     for key, value in RUNTIME_CONF.items():
-        try:
-            spark.conf.set(key, value)
-        except Exception:
-            # Non-settable on this build — keep going; individual loaders
-            # degrade gracefully.
-            pass
-    # Opt-in RocksDB streaming state (unbounded-key deployments).
-    if os.environ.get("SPARK_GRAFT_ROCKSDB_STATE", "").lower() in ("1", "true"):
-        try:
-            enable_rocksdb_state(spark)
-        except Exception:
-            pass
+        spark.conf.set(key, value)
     return spark
 
 
@@ -131,6 +126,10 @@ def get_spark(
 
     The driver heap is :func:`default_driver_memory` of this host unless
     ``$SPARK_GRAFT_DRIVER_MEM`` names one.
+
+    The builder also carries every :data:`RUNTIME_CONF` key.
+    ``getOrCreate`` sets them on a new session and applies them to an
+    existing one, so the session needs no :func:`configure` afterwards.
     """
     cpus = int(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
     checkout = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -196,4 +195,4 @@ def get_spark(
         builder = builder.config("spark.jars", ",".join(merged))
     for key, value in RUNTIME_CONF.items():
         builder = builder.config(key, value)
-    return configure(builder.getOrCreate())
+    return builder.getOrCreate()

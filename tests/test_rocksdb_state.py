@@ -29,19 +29,25 @@ from tests.stream_util import collect_stream
 from tests.test_streaming import _stream_lines, _write_text_files
 
 _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
+#: Every key enable_rocksdb_state sets.
+_ROCKSDB_KEYS = (
+    _PROVIDER_KEY,
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+)
 
 
 @pytest.fixture()
 def rocksdb_spark(spark):
     """The shared session with RocksDB state enabled, restored after."""
-    before = spark.conf.get(_PROVIDER_KEY, None)
+    before = {key: spark.conf.get(key, None) for key in _ROCKSDB_KEYS}
     enable_rocksdb_state(spark)
     assert spark.conf.get(_PROVIDER_KEY) == ROCKSDB_STATE_PROVIDER
     yield spark
-    if before is None:
-        spark.conf.unset(_PROVIDER_KEY)
-    else:
-        spark.conf.set(_PROVIDER_KEY, before)
+    for key, value in before.items():
+        if value is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, value)
 
 
 def test_exact_dedup_parity_under_rocksdb(rocksdb_spark, tmp_path):

@@ -1,19 +1,27 @@
-"""Session sizing and the Python worker daemon
+"""Session sizing, session conf and the Python worker daemon
 (``flink_streaming_2_10_spark.worker_daemon``)."""
 
 from __future__ import annotations
 
 import importlib
 import os
+import re
 import sys
 import zipfile
 import zipimport
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
-from flink_streaming_2_10_spark import worker_daemon
-from flink_streaming_2_10_spark.session import default_driver_memory
+from flink_streaming_2_10_spark import catalog, session, worker_daemon
+from flink_streaming_2_10_spark.session import (
+    RUNTIME_CONF,
+    configure,
+    default_driver_memory,
+)
 
 GiB = 2**30
 
@@ -103,3 +111,60 @@ def test_python_workers_run_the_lazy_invalidation(spark):
     owner, minor = spark.range(1).select(invalidation_owner("id").alias("o")).first()[0]
     expected = "flink_streaming_2_10_spark.worker_daemon" if minor < 13 else "zipimport"
     assert owner == expected
+
+
+def test_configure_raises_on_a_key_it_cannot_set(spark, monkeypatch):
+    """A static conf cannot change on a live session, even to its own
+    value; configure() must say so rather than leave the session half
+    configured."""
+    key = "spark.sql.warehouse.dir"
+    monkeypatch.setattr(session, "RUNTIME_CONF", {key: spark.conf.get(key)})
+    with pytest.raises(AnalysisException, match=key):
+        configure(spark)
+
+
+def test_load_table_configures_a_foreign_session_once(spark, tmp_path, monkeypatch):
+    """A session that get_spark did not build (the driver's) gets
+    RUNTIME_CONF on its first load_table, enough to read a nanosecond
+    events.ts; a cached load does not set it again."""
+    ts = pa.array([1_700_000_000_123_456_789, 1_700_000_001_000_000_001], pa.timestamp("ns"))
+    pq.write_table(pa.table({"id": [1, 2], "ts": ts}), str(tmp_path / "events.parquet"))
+    driver = spark.newSession()
+    for key in RUNTIME_CONF:
+        driver.conf.unset(key)
+    assert driver.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "false"
+
+    calls: list[object] = []
+
+    def spy(target):
+        calls.append(target)
+        return configure(target)
+
+    monkeypatch.setattr(catalog, "configure", spy)
+    events = catalog.load_table(driver, str(tmp_path), "events")
+    assert calls == [driver]
+    assert {key: driver.conf.get(key) for key in RUNTIME_CONF} == RUNTIME_CONF
+    assert dict(events.dtypes)["ts"] == "timestamp"
+    assert events.count() == 2
+
+    calls.clear()
+    assert catalog.load_table(driver, str(tmp_path), "events") is events
+    assert calls == []
+
+
+def test_package_reads_only_the_known_env_knobs():
+    """The package's environment surface: adding a knob means editing
+    this set."""
+    package = os.path.dirname(session.__file__)
+    names = set()
+    for root, _, files in os.walk(package):
+        for name in files:
+            if name.endswith(".py"):
+                with open(os.path.join(root, name)) as f:
+                    names.update(re.findall(r"SPARK_GRAFT_[A-Z0-9_]+", f.read()))
+    assert names == {
+        "SPARK_GRAFT_CPUS",
+        "SPARK_GRAFT_DRIVER_MEM",
+        "SPARK_GRAFT_EXTRA_JARS",
+        "SPARK_GRAFT_KAFKA_JARS",
+    }

@@ -504,71 +504,6 @@ def test_topspeed_stream_compiles_no_classes_per_micro_batch(spark, tmp_path):
     assert counts[5] == counts[1], counts
 
 
-def test_topspeed_stream_tws_equals_batch(spark, tmp_path):
-    """A6 on the Spark 4 arbitrary-state v2 API: the
-    transformWithStateInPandas variant must emit exactly the batch
-    replay's rows, same as the applyInPandasWithState path. Skips only on
-    a Spark without the API; needs the RocksDB state store provider."""
-    from flink_streaming_2_10_spark.operators.topspeed import (
-        top_speed_windowing,
-        top_speed_windowing_stream_tws,
-        transform_with_state_available,
-    )
-
-    if not transform_with_state_available():
-        pytest.skip(
-            "transformWithStateInPandas not runnable here (Spark <4.0, or "
-            "the google.protobuf runtime its driver worker needs is absent)"
-        )
-
-    cars = car_event_simulator(spark, num_cars=2, ticks=60)
-    expected = {tuple(r) for r in top_speed_windowing(cars).collect()}
-
-    rows = cars.orderBy("time").collect()
-    third = len(rows) // 3
-    chunks = [rows[:third], rows[third : 2 * third], rows[2 * third :]]
-    src = str(tmp_path / "in")
-    _write_text_files(
-        src,
-        [
-            "\n".join(f"{r['carId']},{r['speed']},{r['distance']},{r['time']}" for r in chunk)
-            for chunk in chunks
-        ],
-        ext="csv",
-    )
-    parts = F.split(F.col("value"), ",")
-    stream = (
-        spark.readStream.option("maxFilesPerTrigger", 1)
-        .text(src)
-        .select(
-            F.element_at(parts, 1).cast("int").alias("carId"),
-            F.element_at(parts, 2).cast("int").alias("speed"),
-            F.element_at(parts, 3).cast("double").alias("distance"),
-            F.element_at(parts, 4).cast("long").alias("time"),
-        )
-    )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        batches = collect_stream(
-            top_speed_windowing_stream_tws(stream),
-            str(tmp_path / "ck"),
-            output_mode="append",
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
-    got = {tuple(r) for batch in batches for r in batch}
-    assert got == expected
-
-
 def test_kafka_source_contract(spark):
     """S10: the Kafka wiring is gated on connector availability — in this
     container (no connector jar) it must fail with the actionable message,
