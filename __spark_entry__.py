@@ -2230,22 +2230,7 @@ def q_cm_frequency_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Query registry, self-rotated under the driver's 50-row
-    correctness cap: implementation-changed-since-last-driver-green keys
-    first, then least-recently-driver-verified (see
-    ``flink_streaming_2_10_spark/rotation.py``), so every key carries a
-    driver-green row at most one round old — and a key whose code just changed re-verifies
-    the SAME round — even though only 50 are checked per round."""
-    import os
-
-    from flink_streaming_2_10_spark.rotation import staleness_rotated
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    return staleness_rotated(_base_queries(), here, oracle_sql)
-
-
-def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """The registry in canonical order (rotation applied by queries())."""
+    """Query registry: one callable per key, in the order written here."""
     return {
         "wordcount_rolling_sum": q_wordcount,
         "pojo_wordcount_sum": q_pojo_wordcount,

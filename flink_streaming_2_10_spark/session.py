@@ -100,6 +100,9 @@ def get_spark(
     single submission-context switch, as in the reference's
     ``StreamExecutionEnvironment.getExecutionEnvironment``).
 
+    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS``, else to the cores this
+    process may run on.
+
     Two settings here set the fixed cost of a streaming trigger, which
     dominates each micro-batch of the streaming programs:
 
@@ -131,7 +134,9 @@ def get_spark(
     ``getOrCreate`` sets them on a new session and applies them to an
     existing one, so the session needs no :func:`configure` afterwards.
     """
-    cpus = int(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(
+        cpus or os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
     checkout = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

@@ -3,10 +3,13 @@ matches its oracle_sql() — a fast local replica of the driver's sf0.01 gate.""
 
 from __future__ import annotations
 
+import importlib.util
+import os
+import sys
+
 import pytest
 
 import __spark_entry__ as entrymod
-from flink_streaming_2_10_spark.rotation import staleness_rotated
 from tests.conftest import SF_SMALL, assert_df_matches_oracle
 
 QUERIES = entrymod.queries()
@@ -29,37 +32,38 @@ def test_oracle_keys_subset_of_queries():
     assert set(ORACLES) <= set(QUERIES)
 
 
-def test_staleness_rotation_orders_unverified_first(tmp_path):
-    """The self-rotating registry puts least-recently-driver-verified
-    keys first so the 50-row correctness window covers every key at
-    most one round stale; unreadable files degrade gracefully."""
-    import json
+def test_queries_keep_the_registry_written_order():
+    """queries() returns the registry dict as written: the same key list
+    on every call, starting with the flagship word counts."""
+    keys = list(entrymod.queries())
+    assert keys[:3] == [
+        "wordcount_rolling_sum",
+        "pojo_wordcount_sum",
+        "tpch_q1_pricing_summary",
+    ]
+    assert list(entrymod.queries()) == keys
+    assert len(set(keys)) == 135
 
-    base = dict.fromkeys(["a", "b", "c", "d"], object())
-    # r1 recorded a,b,c,d; r2 recorded only b,c -> staleness: a,d then b,c
-    (tmp_path / "CORRECTNESS_r01.json").write_text(
-        json.dumps(dict.fromkeys(["a", "b", "c", "d"], {}))
+
+def test_selfcheck_rejects_an_unknown_query_before_starting_spark(monkeypatch, capsys):
+    """A misspelt name must not read as a clean run of nothing."""
+    from flink_streaming_2_10_spark import session
+
+    path = os.path.join(os.path.dirname(entrymod.__file__), "tools", "selfcheck.py")
+    spec = importlib.util.spec_from_file_location("selfcheck", path)
+    selfcheck = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(selfcheck)
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("selfcheck started a Spark session")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    monkeypatch.setattr(
+        sys, "argv", ["selfcheck.py", SF_SMALL, "wordcount_rolling_sum", "no_such_query"]
     )
-    (tmp_path / "CORRECTNESS_r02.json").write_text(
-        json.dumps(dict.fromkeys(["b", "c"], {}))
-    )
-    (tmp_path / "CORRECTNESS_r03.json").write_text("{not json")  # ignored
-    got = list(staleness_rotated(base, str(tmp_path), entrymod.oracle_sql))
-    assert got == ["a", "d", "b", "c"]
-    # never-recorded keys sort before everything
-    base2 = {"zz_new": object(), **base}
-    assert (
-        list(staleness_rotated(base2, str(tmp_path), entrymod.oracle_sql))[0]
-        == "zz_new"
-    )
-    # empty evidence dir degrades to canonical order
-    empty = tmp_path / "none"
-    empty.mkdir()
-    assert list(
-        staleness_rotated(base, str(empty), entrymod.oracle_sql)
-    ) == list(base)
-    # real registry invariant: rotation is a permutation of the canon
-    assert set(entrymod.queries()) == set(QUERIES)
+    assert selfcheck.main() == 2
+    assert "no_such_query" in capsys.readouterr().err
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))

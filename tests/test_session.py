@@ -14,13 +14,14 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import AnalysisException
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession, functions as F
 
 from flink_streaming_2_10_spark import catalog, session, worker_daemon
 from flink_streaming_2_10_spark.session import (
     RUNTIME_CONF,
     configure,
     default_driver_memory,
+    get_spark,
 )
 
 GiB = 2**30
@@ -34,6 +35,22 @@ def test_default_driver_memory_is_half_the_host_within_1g_to_16g():
     assert default_driver_memory(GiB) == "1g"
     physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     assert int(default_driver_memory()[:-1]) * GiB <= max(physical // 2, GiB)
+
+
+def test_get_spark_defaults_to_the_cores_this_process_may_use(monkeypatch):
+    """Without ``cpus`` or ``$SPARK_GRAFT_CPUS`` the session gets one
+    task slot and one shuffle partition per usable core; the knob still
+    wins. The builder's options are read back, so no JVM starts."""
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda b: dict(b._options))
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    cores = len(os.sched_getaffinity(0))
+    options = get_spark()
+    assert options["spark.master"] == f"local[{cores}]"
+    assert options["spark.sql.shuffle.partitions"] == str(cores)
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert get_spark()["spark.master"] == "local[3]"
+    assert get_spark(cpus=2)["spark.master"] == "local[2]"
 
 
 def _write_probe_zip(path, value: str) -> None:

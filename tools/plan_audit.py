@@ -119,14 +119,14 @@ def main() -> None:
 
     rows = []
     try:
-        # SORTED name order (not the staleness-rotated queries() order):
-        # artifact row order must be stable across rounds or every regen
-        # diffs the whole table (bench.py's artifact-key rule). And
-        # release operator-internal persists BETWEEN queries: an earlier
-        # query's materialized cache turns a later query's subtree into
-        # an InMemoryTableScan, silently changing its audited exchange
-        # count with the rotation (r16 found dedup_lsh_recall reading
-        # 20 vs 27 shuffles purely by audit order).
+        # SORTED name order, not the registry's written order: artifact
+        # row order must not move when a query is added or moved in the
+        # registry, or every regen diffs the whole table. And release
+        # operator-internal persists BETWEEN queries: an earlier query's
+        # materialized cache turns a later query's subtree into an
+        # InMemoryTableScan, silently changing its audited exchange count
+        # with the audit order (r16 found dedup_lsh_recall reading 20 vs
+        # 27 shuffles purely by audit order).
         for name, fn in sorted(entrymod.queries().items()):
             captured.clear()
             release_cached()

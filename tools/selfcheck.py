@@ -6,6 +6,9 @@ order-insensitive exact value comparison (floats compared bit-exact, since
 the driver hashes values).
 
 Usage: python tools/selfcheck.py [sf_dir] [query ...]
+
+Exits 0 when every query matches, 1 on any failure, and 2 before starting
+Spark when a named query is not in the registry.
 """
 
 from __future__ import annotations
@@ -35,6 +38,12 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from flink_streaming_2_10_spark.session import get_spark
 
+    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown queries: {unknown}", file=sys.stderr)
+        return 2
+
     spark = get_spark("selfcheck", cpus=8)
     con = duckdb.connect()
     for name in (
@@ -45,7 +54,6 @@ def main() -> int:
             f"CREATE VIEW {name} AS SELECT * FROM '{sf_dir}/{name}.parquet'"
         )
 
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
